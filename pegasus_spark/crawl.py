@@ -125,14 +125,16 @@ def _make_ctx(spark: SparkSession, cfg: CrawlConfig) -> tuple[RoundContext, Chec
         gate=gate,
         crawl_delays=crawl_delays,
         robots=robots,
+        # one fmt-column probe: an all-lossless store lets every fetch
+        # prune the raw pixels_ref column (validation via stored
+        # checksums only)
+        has_lossy=store_has_lossy(pages),
+        # 3xx / transient-failure probes: all-200 never-failing stores
+        # skip the redirect and retry machinery entirely (round plan
+        # unchanged)
+        has_redirects=store_has_redirects(pages),
+        has_flaky=store_has_flaky(pages),
     )
-    # one fmt-column probe: an all-lossless store lets every fetch prune
-    # the raw pixels_ref column (validation via stored checksums only)
-    ctx.has_lossy = store_has_lossy(ctx.pages)
-    # 3xx / transient-failure probes: all-200 never-failing stores skip
-    # the redirect and retry machinery entirely (round plan unchanged)
-    ctx.has_redirects = store_has_redirects(ctx.pages)
-    ctx.has_flaky = store_has_flaky(ctx.pages)
     for stage in (cfg.extractor, cfg.pre_enqueue, cfg.writer):
         if stage is not None:
             stage.setup(spark, cfg)

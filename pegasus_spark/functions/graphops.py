@@ -42,19 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _free_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a ``localCheckpoint(eager=True)``'s cached
-    blocks (ADVICE r5: iterative loops otherwise hold every round's
-    checkpointed labels in executor storage simultaneously). The
-    checkpointed Dataset's analyzed plan is a LogicalRDD whose ``rdd``
-    field is exactly the persisted RDD; unpersist it non-blocking.
-    Failure is harmless — Spark's ContextCleaner unpersists the RDD
-    anyway once the driver-side reference is garbage-collected."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+from ..lineage import free_checkpoint
 
 
 def connected_components(edges: DataFrame, src: str, dst: str,
@@ -144,9 +132,9 @@ def connected_components(edges: DataFrame, src: str, dst: str,
             .localCheckpoint(eager=True)
         )
         cur_sum = obs.get["s"]
-        _free_checkpoint(prev_labels)
+        free_checkpoint(prev_labels)
         if cur_sum == prev_sum:
-            _free_checkpoint(bidir)
+            free_checkpoint(bidir)
             return labels.select("node", F.col("label").alias("cluster_id")) \
                          .withColumnRenamed("node", id_col)
         prev_sum = cur_sum
@@ -240,7 +228,7 @@ def connected_components_star(edges: DataFrame, src: str, dst: str,
         # equality probe above was their last consumer): release the
         # blocks instead of accumulating every round's edge set (ADVICE)
         if e is not e_input:
-            _free_checkpoint(e)
+            free_checkpoint(e)
         e, prev_count = new_e, cur_count
         if converged:
             break

@@ -234,14 +234,6 @@ def _minhash_sig_agg(df: DataFrame, text_col: str, num_hashes: int,
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signature(df: DataFrame, text_col: str = "text", num_hashes: int = 8,
-                      shingle_n: int = 3) -> DataFrame:
-    """MinHash signature per document: one md5-int per shingle, k seeds
-    derived by integer mixing, min per seed. Columns mh0..mh{k-1}.
-    Built-ins only."""
-    return df.join(_minhash_sig_agg(df, text_col, num_hashes, shingle_n), "doc_id")
-
-
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", num_hashes: int = 8,
                       band_size: int = 2) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs: band the signature, self-join

@@ -114,16 +114,6 @@ def xxhash64_long(v: int, seed: int = SPARK_XXHASH64_SEED) -> int:
     return _to_signed64(h)
 
 
-def xxhash64_series(strings) -> "np.ndarray":
-    """Vectorized-ish helper: signed XXH64 over an iterable of strings.
-
-    The per-string core is C-speed ``int.from_bytes`` loops; for fixture
-    and oracle sizes (≤1e6) this is plenty. Engine hot path uses JVM
-    ``F.xxhash64`` instead.
-    """
-    return np.fromiter((xxhash64_str(s) for s in strings), dtype=np.int64)
-
-
 # --- bloom-filter index derivation (vectorized, numpy) ------------------
 
 def bloom_indexes(hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:

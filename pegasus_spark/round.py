@@ -31,6 +31,7 @@ from . import politeness
 from .canon import resolve_canonicalize
 from .config import CrawlConfig
 from .fetch import fetch_and_validate
+from .lineage import free_checkpoint
 from .seen import SeenSet
 from .tables import ManifestCatalog
 
@@ -124,11 +125,13 @@ class RoundContext:
     are refreshed per round when robots are discovered mid-crawl
     (``robots`` is a RobotsCache in discover mode, None in preparsed).
     ``gate(df, url_col)`` adds ``allowed:boolean`` via a host-join against
-    the rules table (robots.make_gate — no driver-side rules structure)."""
+    the rules table (robots.make_gate — no driver-side rules structure).
+    ``has_lossy``/``has_redirects``/``has_flaky`` are the crawl-start
+    page-store probes (fetch.store_has_*)."""
 
     def __init__(self, spark: SparkSession, cat: ManifestCatalog, seen: SeenSet,
                  cfg: CrawlConfig, pages: DataFrame, gate, crawl_delays: DataFrame,
-                 robots=None):
+                 robots=None, *, has_lossy: bool, has_redirects: bool, has_flaky: bool):
         self.spark = spark
         self.cat = cat
         self.seen = seen
@@ -137,6 +140,9 @@ class RoundContext:
         self.gate = gate
         self.crawl_delays = crawl_delays
         self.robots = robots
+        self.has_lossy = has_lossy
+        self.has_redirects = has_redirects
+        self.has_flaky = has_flaky
         # floor-safe approximate frontier row count (resume seeds it with
         # the visited count; every enqueue adds its n_new) — drives the
         # size-adaptive plan gates (config.bloom_probe_min_rows /
@@ -186,13 +192,12 @@ def enqueue_new(ctx: RoundContext, cand: DataFrame, discovered_round: int) -> tu
     # an empty merge is a tiny pass-through cogroup of P bloom rows.
     from concurrent.futures import ThreadPoolExecutor
 
-    enq_workers = 1 if os.environ.get("PEGASUS_ROUND_SERIAL") == "1" else 2
     # below the probe threshold the bloom has no reader: defer the merge
     # (the frontier append IS the exact-set update; filter_new's probe
     # path rebuilds the bloom once at the threshold crossing) — the
     # per-round merge job was ~12% of the headline crawl's wall
     defer_bloom = ctx.approx_frontier_rows < ctx.cfg.bloom_probe_min_rows
-    with ThreadPoolExecutor(max_workers=enq_workers) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         f_app = pool.submit(ctx.cat.append, "frontier", rows)
         f_seen = pool.submit(ctx.seen.add, new.select("url_hash"),
                              defer_bloom=defer_bloom)
@@ -298,8 +303,7 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         ctx.gate = ctx.robots.gate()
 
     frontier = ctx.cat.read("frontier")
-    has_redirects = getattr(ctx, "has_redirects", False)
-    has_flaky = getattr(ctx, "has_flaky", False)
+    has_redirects, has_flaky = ctx.has_redirects, ctx.has_flaky
     visited_hashes = ctx.cat.read("corpus").select("url_hash")
     if has_redirects:
         # redirect-chain members are visited without corpus rows of their
@@ -366,59 +370,37 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         # is cheaper (identical selection — politeness.schedule docstring)
         prune=ctx.approx_frontier_rows >= cfg.politeness_prune_min_rows,
     )
-    if tb > 0 and ctx.cat.bucket_spec("frontier") and cfg.corpus_size is not None:
-        # Truncate the B-branch pending lineage NOW. persist() caches
-        # data but NOT the logical plan: every downstream consumer (the
-        # B fetch-join slices, the B extract slices, each redirect hop)
-        # re-embeds sched's full logical plan, and with the bucket fan
-        # that multiplies to O(B² · hops) plan nodes per action —
-        # measured: 2.7M AttributeReference / 208k Project nodes OOMing
-        # a 4 GB driver on a 120-page toy crawl. localCheckpoint roots
-        # the selection (round-bounded, ≤ hosts·budget rows) as a
-        # LogicalRDD, making every consumer's plan O(1) in B and R.
-        # Only needed on the persist (corpus_size) path: the unbounded
-        # path below checkpoints sched for EVERY layout.
-        sched = sched.localCheckpoint(eager=True)
-    if cfg.corpus_size is not None:
-        # truncation needs the selected count BEFORE the fetch runs →
-        # one dedicated count job on this path only
-        sched = sched.persist()
-        cnt = sched.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("selected").cast("long")).alias("n_sel"),
-        ).collect()[0]
-        n_pending, n_sel = int(cnt["n"]), int(cnt["n_sel"] or 0)
-    else:
-        # unbounded crawl: materialize the schedule ONCE as a
-        # LogicalRDD with the counts riding the materialization.
-        # persist() used to defer this to whichever concurrent branch
-        # won the cache race — the two losers stalled on the cache lock
-        # while every branch still planned/compiled against the full
-        # frontier-scan→anti-join→window subtree. The eager checkpoint
-        # costs the same one computation, but all three branches then
-        # plan against a flat, stats-free root (smaller plans, no lock
-        # convoy) and the counts are known BEFORE the branch fan-out —
-        # so an exhausted frontier exits before launching empty writes.
-        obs_s = Observation()
-        sched = sched.observe(
-            obs_s,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("selected").cast("long")).alias("n_sel"),
-        ).localCheckpoint(eager=True)
-        cs = _obs_get(obs_s, lambda: sched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("selected").cast("long")).alias("n_sel")).collect()[0])
-        n_pending, n_sel = int(cs["n"]), int(cs["n_sel"] or 0)
+    # Every consumer (fetch, extract, host clocks, each redirect hop and,
+    # on bucketed layouts, each of their B slices) reads only the
+    # selected rows, so only those are materialized: one eager
+    # localCheckpoint roots the round-bounded selection (≤ hosts·budget
+    # rows, not the whole pending frontier) as a LogicalRDD, so no
+    # consumer re-plans the frontier-scan → anti-join → window subtree
+    # (re-embedded per bucket and per hop it grew to O(B²·hops) plan
+    # nodes and OOMed a 4 GB driver on a 120-page bucketed crawl). The
+    # pending/selected counts ride that same job via observe(), so they
+    # are known before the branch fan-out — for the corpus-size
+    # truncation, and so an exhausted frontier exits before any write.
+    obs_s = Observation()
+    root = sched.observe(
+        obs_s,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("selected").cast("long")).alias("n_sel"),
+    ).filter("selected").localCheckpoint(eager=True)
+    cs = _obs_get(obs_s, lambda: sched.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("selected").cast("long")).alias("n_sel")).collect()[0])
+    n_pending, n_sel = int(cs["n"]), int(cs["n_sel"] or 0)
     st_t.lap("schedule+counts")
     if n_pending == 0:
-        sched.unpersist()
+        free_checkpoint(root)
         wall_ms = int((time.monotonic() - t_start) * 1000)
         ctx.cat.append_local("metrics", _metrics_table([(r, -1, 0, 0, 0, 0, 0, 0, wall_ms)]))
         return {"round": r, "fetched": 0, "enqueued": 0, "dropped_seen": 0,
                 "dropped_robots": 0, "deferred": 0, "retried": 0, "exhausted": True,
                 "capped": False, "wall_ms": wall_ms}
 
-    selected = sched.filter("selected")
+    selected = root
     capped = False
     if cfg.corpus_size is not None and visited_total + n_sel > cfg.corpus_size:
         remaining = cfg.corpus_size - visited_total
@@ -491,7 +473,7 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         # tiny (redirect sources + exhausted rows only), consumed by the
         # fetch join, the extraction join and the redirects append —
         # rooting it as a LogicalRDD keeps consumer plans flat (see the
-        # sched note above); inputs are already materialized, so this is
+        # selection note above); inputs are already materialized, so this is
         # one cheap job, and rounds with neither chains nor exhaustions
         # skip it entirely
         mapping = mapping.localCheckpoint(eager=True)
@@ -503,9 +485,9 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
     # that needs one tiny column.
     fetched = fetch_and_validate(
         fetch_input, ctx.pages, cfg.host_buckets, cfg.validate_payloads,
-        selection_count=n_sel if n_sel >= 0 else None,
+        selection_count=n_sel,
         broadcast_max=cfg.fetch_broadcast_max,
-        has_lossy=getattr(ctx, "has_lossy", None),
+        has_lossy=ctx.has_lossy,
         mapping=(mapping.select("url_hash", "final_hash", "final_url", "fetch_status")
                  if mapping is not None else None),
         store_buckets=cfg.store_bucket_count,
@@ -567,8 +549,7 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
             )
         else:
             sel_keys = sel_keys.withColumn("_content_hash", F.col("url_hash"))
-        bcast_sel = cfg.fetch_broadcast_max > 0 and (
-            n_sel < 0 or n_sel <= cfg.fetch_broadcast_max)
+        bcast_sel = cfg.fetch_broadcast_max > 0 and n_sel <= cfg.fetch_broadcast_max
         page_links = ctx.pages
         if cfg.extract_fmts is not None:
             # content-type gate (pegasus drops non-HTML before extraction):
@@ -639,18 +620,15 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         ctx.cat.append("redirects", ch)
 
     # --- the corpus append, the extract/enqueue chain and the host-clock
-    # update are pairwise INDEPENDENT (all consume the persisted `sched`;
+    # update are pairwise INDEPENDENT (all consume the checkpointed selection;
     # they write different tables and the txn serializes only the final
     # CURRENT swaps): submit all three as concurrent Spark jobs. The
     # driver's serial commit/scheduling path was the measured scaling
     # bottleneck at small round sizes (BENCH/scaling_crawl.json r2) —
     # concurrency collapses three job-latency chains into max() of them.
-    # PEGASUS_ROUND_SERIAL=1 degrades to sequential submission (A/B knob
-    # for the scaling harness; semantics identical either way).
     from concurrent.futures import ThreadPoolExecutor
 
-    n_base = 3 + (1 if retry_rows is not None else 0) + (1 if rmap is not None else 0)
-    n_workers = 1 if os.environ.get("PEGASUS_ROUND_SERIAL") == "1" else n_base
+    n_workers = 3 + (1 if retry_rows is not None else 0) + (1 if rmap is not None else 0)
 
     def _timed(label, fn):
         # per-branch wall clock (concurrent branches overlap, so these
@@ -695,9 +673,9 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
     ]
     ctx.cat.append_local("metrics", _metrics_table(mrows))
 
-    sched.unpersist()
+    free_checkpoint(root)
     if mapping is not None:
-        mapping.unpersist()
+        free_checkpoint(mapping)
     return {"round": r, "fetched": n_fetched, "enqueued": n_enq,
             "dropped_seen": dropped_seen, "dropped_robots": dropped_robots,
             "deferred": n_pending - n_sel, "retried": n_retried, "exhausted": False,

@@ -38,14 +38,15 @@ def _max_job_id(spark) -> int:
 
 
 # Same fixture crawled in the full PRODUCTION layout (bucketed
-# frontier/corpus + compaction firing mid-crawl): the bucket-wise
-# anti-join adds one sched localCheckpoint job per round and each
-# compaction pass adds a handful of rewrite jobs. Measured round 5
-# at round_width_vt=24000 (9 rounds): 342.
+# frontier/corpus + compaction firing mid-crawl): each compaction pass
+# adds a handful of rewrite jobs. Measured round 5 at
+# round_width_vt=24000 (9 rounds): 342.
 MAX_JOBS_TOTAL_BUCKETED = 380
+PRODUCTION_LAYOUT = dict(table_bucket_count=4, compact_every=4, compact_target_dirs=4)
 
 
-def _run_pinned(spark, ceiling, label, **cfg_kw):
+def _run_pinned(spark, ceiling, label, **cfg_kw) -> tuple[int, int]:
+    """Crawl the pinned fixture; returns (Spark jobs submitted, rounds)."""
     tmp = tempfile.mkdtemp()
     try:
         web = generate_web(WebParams(seed=7, n_pages=120, n_hosts=5,
@@ -65,6 +66,7 @@ def _run_pinned(spark, ceiling, label, **cfg_kw):
             f"the pinned ceiling of {ceiling}; if the growth is an "
             "intentional structural change, re-measure and move the pin "
             "in the same commit")
+        return delta, res.rounds
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -75,4 +77,21 @@ def test_jobs_per_crawl_pinned(spark):
 
 def test_jobs_per_crawl_pinned_production_layout(spark):
     _run_pinned(spark, MAX_JOBS_TOTAL_BUCKETED, "bucketed+compacting",
-                table_bucket_count=4, compact_every=4, compact_target_dirs=4)
+                **PRODUCTION_LAYOUT)
+
+
+def test_corpus_cap_adds_no_job_per_round(spark):
+    """A corpus_size cap that never trips runs the same rounds as an
+    uncapped crawl, and the cap costs no Spark job of its own: the
+    truncation reads the selected count off the schedule checkpoint
+    instead of a dedicated count action (one job per round would show
+    as a difference of at least the round count)."""
+    jobs, rounds = _run_pinned(spark, MAX_JOBS_TOTAL_BUCKETED, "bucketed+compacting",
+                               **PRODUCTION_LAYOUT)
+    capped_jobs, capped_rounds = _run_pinned(
+        spark, MAX_JOBS_TOTAL_BUCKETED, "bucketed+compacting+capped",
+        corpus_size=10_000, **PRODUCTION_LAYOUT)
+    assert capped_rounds == rounds
+    assert capped_jobs - jobs < rounds, (
+        f"capped crawl submitted {capped_jobs} jobs vs {jobs} uncapped "
+        f"over {rounds} rounds")

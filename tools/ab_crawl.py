@@ -9,8 +9,7 @@ interleaved (arm1, arm2, ..., arm1, arm2, ...) so host drift hits every
 arm equally, and reports per-arm medians + per-pass deltas.
 
 Usage: python tools/ab_crawl.py ARM=PATH[:ENV=V[,ENV=V]] ... [--runs N]
-  e.g. python tools/ab_crawl.py r2=/tmp/r2tree head=/root/repo \
-         head_serial=/root/repo:PEGASUS_ROUND_SERIAL=1 --runs 3
+  e.g. python tools/ab_crawl.py base=/tmp/base_tree head=. --runs 3
 Writes BENCH/ab_<arms>.json.
 """
 
