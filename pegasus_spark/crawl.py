@@ -11,10 +11,14 @@ from versioned-table snapshots instead of durable-queue slabs + LMDB.
 Stop conditions (O13): ``visited ≥ corpus_size`` (with deterministic
 final-round truncation) or frontier exhaustion — pegasus's
 corpus-size/num-visited stop semantics.
+
+``streaming.stream_crawl`` runs the same start-up step, seed commit and
+round loop (``_open``, ``_commit_seeds``, ``_run_rounds``) per seed batch.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -36,6 +40,7 @@ from .round import (
     REDIRECTS_DDL,
     RETRIES_DDL,
     RoundContext,
+    _StepTimer,
     frontier_exhausts_after,
     inject_seeds,
     run_round,
@@ -52,7 +57,7 @@ TABLES = ["frontier", "corpus", "hosts", "metrics", "seen", "bloom", "robots",
 class CrawlResult:
     rounds: int
     visited: int
-    stop_reason: str  # "corpus_size" | "exhausted" | "max_rounds"
+    stop_reason: str  # "corpus_size" | "exhausted" | "stop_check" | "max_rounds"
     round_stats: list = field(default_factory=list)
     # wall seconds spent in between-round incremental compaction — table
     # MAINTENANCE, not crawl critical path (on a real lakehouse this is a
@@ -141,29 +146,21 @@ def _make_ctx(spark: SparkSession, cfg: CrawlConfig) -> tuple[RoundContext, Chec
     return ctx, CheckpointStore(cfg.job_dir)
 
 
-import os as _os
-import time as _time
-
-_TIMING = _os.environ.get("PEGASUS_DEBUG_TIMING") == "1"
-
-
-def _tlap(t0: float, label: str) -> float:
-    now = _time.monotonic()
-    if _TIMING:
-        print(f"  [crawl] {label}: {now - t0:.2f}s", flush=True)
-    return now
-
-
-def crawl(spark: SparkSession, cfg: CrawlConfig, resume: bool = False) -> CrawlResult:
-    if not resume:
+def _open(spark: SparkSession, cfg: CrawlConfig, resume: bool
+          ) -> tuple[RoundContext, CheckpointStore, dict | None]:
+    """Start-up step of both drivers: refuse stale state, build the round
+    context, and on resume roll the tables back to the latest checkpoint
+    (``latest``; None when there is none and the crawl starts fresh)."""
+    latest = CheckpointStore(cfg.job_dir).latest()
+    if latest is not None and not resume:
         # a fresh crawl over stale state would silently drop the re-injected
         # seeds (seen-set) and misalign round-0 virtual time with the
         # already-advanced host clocks — refuse instead of corrupting
-        if CheckpointStore(cfg.job_dir).latest() is not None:
-            raise ValueError(
-                f"job_dir {cfg.job_dir!r} holds a prior crawl's checkpoints; "
-                "pass resume=True to continue it or point at a clean job_dir"
-            )
+        raise ValueError(
+            f"job_dir {cfg.job_dir!r} holds a prior crawl's checkpoints; "
+            "pass resume=True to continue it or point at a clean job_dir"
+        )
+    if latest is None:
         # a run that crashed BEFORE its first checkpoint leaves populated
         # (possibly mutually inconsistent) tables with no checkpoint to
         # resume from — equally unsafe to build on
@@ -175,68 +172,66 @@ def crawl(spark: SparkSession, cfg: CrawlConfig, resume: bool = False) -> CrawlR
                     "but no checkpoint (a crawl crashed before its first "
                     "commit?); point at a clean job_dir"
                 )
-    _t = _time.monotonic()
+    timer = _StepTimer("crawl")
     ctx, ckpt = _make_ctx(spark, cfg)
-    _t = _tlap(_t, "make_ctx")
-    cat = ctx.cat
-
-    start_round = 0
-    visited = 0
-    stats: list[dict] = []
-
-    latest = ckpt.latest() if resume else None
+    timer.lap("make_ctx")
     if latest is not None:
-        if latest.get("stopped"):
-            return CrawlResult(
-                rounds=latest["round"] + 1, visited=latest["visited"],
-                stop_reason=latest["reason"],
-            )
-        # roll tables back to the last fully-committed round, continue
-        cat.restore(latest["versions"])
-        start_round = latest["round"] + 1
-        visited = latest["visited"]
+        # a crash between a round's commits and its checkpoint: roll
+        # them back so the round replays instead of stacking on them
+        ctx.cat.restore(latest["versions"])
         # floor-safe frontier-size seed for the size-adaptive plan gates
         # (frontier rows ≥ visited rows — see RoundContext)
-        ctx.approx_frontier_rows = visited
-    else:
-        if cfg.seeds is not None:
-            seeds_df = spark.createDataFrame(
-                [(u, 0) for u in cfg.seeds], "url string, priority int"
-            )
-        else:
-            seeds_df = spark.read.parquet(f"{cfg.web_dir}/seeds.parquet")
-        with cat.txn():  # seed injection = one atomic frontier+bloom commit
-            inject_seeds(ctx, seeds_df)
-        _t = _tlap(_t, "inject_seeds")
-        ckpt.save(-1, {"versions": cat.snapshot(TABLES), "visited": 0, "stopped": False})
+        ctx.approx_frontier_rows = latest["visited"]
+    return ctx, ckpt, latest
 
-    stop_reason = "max_rounds"
-    compact_sec = 0.0
-    r = start_round
+
+def _commit_seeds(ctx: RoundContext, ckpt: CheckpointStore, seeds_df,
+                  r: int, visited: int) -> None:
+    """Seed commit: one atomic frontier+bloom commit, then a checkpoint
+    at round ``r - 1`` so a crash before round ``r``'s checkpoint
+    resumes with the seeds in place."""
+    timer = _StepTimer("crawl")
+    with ctx.cat.txn():
+        inject_seeds(ctx, seeds_df)
+    timer.lap("inject_seeds")
+    ckpt.save(r - 1, {"versions": ctx.cat.snapshot(TABLES), "visited": visited,
+                      "stopped": False})
+
+
+def _run_rounds(ctx: RoundContext, ckpt: CheckpointStore, r: int,
+                visited: int) -> CrawlResult:
+    """The round loop of both drivers: run rounds from ``r`` until a stop
+    rule fires or round ``max_rounds`` (an absolute cap) is reached,
+    checkpointing every round and compacting every ``compact_every``."""
+    cfg, cat = ctx.cfg, ctx.cat
+    res = CrawlResult(rounds=0, visited=visited, stop_reason="max_rounds")
     while r < cfg.max_rounds:
-        st = run_round(ctx, r, visited)
-        stats.append(st)
-        visited += st["fetched"]
-        stopped = False
+        st = run_round(ctx, r, res.visited)
+        res.round_stats.append(st)
+        res.visited += st["fetched"]
+        stopped = True
         if st["exhausted"]:
-            stop_reason, stopped = "exhausted", True
-        elif cfg.corpus_size is not None and visited >= cfg.corpus_size:
-            stop_reason, stopped = "corpus_size", True
+            res.stop_reason = "exhausted"
+        elif cfg.corpus_size is not None and res.visited >= cfg.corpus_size:
+            res.stop_reason = "corpus_size"
         elif frontier_exhausts_after(st):
             # the round's own counts prove the next pending set is empty:
             # stop now instead of paying a full empty probe round (the
             # oracle applies the identical rule — see round.py docstring)
-            stop_reason, stopped = "exhausted", True
-        elif cfg.stop_check is not None and cfg.stop_check(r, visited, st["exhausted"]):
-            stop_reason, stopped = "stop_check", True
+            res.stop_reason = "exhausted"
+        elif cfg.stop_check is not None and cfg.stop_check(r, res.visited, st["exhausted"]):
+            res.stop_reason = "stop_check"
+        else:
+            stopped = False
         if cfg.update_state is not None:
             cfg.update_state(st)  # may mutate st → lands in the checkpoint
         ckpt.save(r, {
-            "versions": cat.snapshot(TABLES), "visited": visited,
-            "stopped": stopped, "reason": stop_reason if stopped else None,
+            "versions": cat.snapshot(TABLES), "visited": res.visited,
+            "stopped": stopped, "reason": res.stop_reason if stopped else None,
             "stats": {k: v for k, v in st.items() if k != "round"},
         })
         r += 1
+        res.rounds += 1
         if stopped:
             break
         if cfg.compact_every and r % cfg.compact_every == 0:
@@ -247,15 +242,31 @@ def crawl(spark: SparkSession, cfg: CrawlConfig, resume: bool = False) -> CrawlR
             # parity and golden traces are unaffected.
             # seen appends only in overflow mode and robots only in
             # discover mode; compact() is a no-op at ≤ target dirs
-            _c0 = _time.monotonic()
+            c0 = time.monotonic()
             for t in ("frontier", "corpus", "redirects", "retries",
                       "metrics", "seen", "robots"):
                 cat.compact(t, cfg.compact_target_dirs)
-            compact_sec += _time.monotonic() - _c0
+            res.compact_sec += time.monotonic() - c0
+    res.compact_sec = round(res.compact_sec, 2)
+    return res
 
+
+def crawl(spark: SparkSession, cfg: CrawlConfig, resume: bool = False) -> CrawlResult:
+    ctx, ckpt, latest = _open(spark, cfg, resume)
+    if latest is not None and latest.get("stopped"):
+        return CrawlResult(rounds=latest["round"] + 1, visited=latest["visited"],
+                           stop_reason=latest["reason"])
+    if latest is None:
+        if cfg.seeds is not None:
+            seeds_df = spark.createDataFrame(
+                [(u, 0) for u in cfg.seeds], "url string, priority int"
+            )
+        else:
+            seeds_df = spark.read.parquet(f"{cfg.web_dir}/seeds.parquet")
+        _commit_seeds(ctx, ckpt, seeds_df, 0, 0)
+    r, visited = (latest["round"] + 1, latest["visited"]) if latest else (0, 0)
+    res = _run_rounds(ctx, ckpt, r, visited)
     for stage in (cfg.extractor, cfg.pre_enqueue, cfg.writer):
         if stage is not None:
             stage.teardown()
-    return CrawlResult(rounds=r - start_round, visited=visited,
-                       stop_reason=stop_reason, round_stats=stats,
-                       compact_sec=round(compact_sec, 2))
+    return res

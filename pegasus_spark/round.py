@@ -20,7 +20,7 @@ Physical design notes (the 100 TB story):
 
 from __future__ import annotations
 
-import os
+import logging
 import time
 
 import pandas as pd
@@ -185,24 +185,28 @@ def enqueue_new(ctx: RoundContext, cand: DataFrame, discovered_round: int) -> tu
         F.lit(discovered_round).cast("int").alias("discovered_round"),
         "src_url_hash",
     )
-    # frontier append and bloom merge are independent consumers of the
-    # persisted `new` (different tables, txn-staged commits): run them as
-    # concurrent jobs. seen.add is now unconditional — the n_new>0 gate
-    # required the append's observation first, re-serializing the chain;
-    # an empty merge is a tiny pass-through cogroup of P bloom rows.
-    from concurrent.futures import ThreadPoolExecutor
-
     # below the probe threshold the bloom has no reader: defer the merge
     # (the frontier append IS the exact-set update; filter_new's probe
     # path rebuilds the bloom once at the threshold crossing) — the
     # per-round merge job was ~12% of the headline crawl's wall
     defer_bloom = ctx.approx_frontier_rows < ctx.cfg.bloom_probe_min_rows
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_app = pool.submit(ctx.cat.append, "frontier", rows)
-        f_seen = pool.submit(ctx.seen.add, new.select("url_hash"),
-                             defer_bloom=defer_bloom)
-        f_app.result()
-        f_seen.result()
+    if defer_bloom and ctx.seen.exact_source is not None:
+        # the frontier is the exact set, so a deferred seen.add has
+        # nothing to do; the frontier count never falls, so no earlier
+        # probe can have marked the bloom in sync
+        ctx.cat.append("frontier", rows)
+    else:
+        # frontier append and bloom merge are independent consumers of
+        # the persisted `new` (different tables, txn-staged commits): run
+        # them as concurrent jobs
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_app = pool.submit(ctx.cat.append, "frontier", rows)
+            f_seen = pool.submit(ctx.seen.add, new.select("url_hash"),
+                                 defer_bloom=defer_bloom)
+            f_app.result()
+            f_seen.result()
     et.lap("frontier_append|seen_add")
     cf = _obs_get(obs_f, lambda: ctx.gate(cand).agg(
         F.count(F.lit(1)).alias("n"),
@@ -243,25 +247,23 @@ def _obs_get(obs: Observation, fallback):
         return fallback()
 
 
-_TIMING = os.environ.get("PEGASUS_DEBUG_TIMING") == "1"
+log = logging.getLogger("pegasus_spark")
 
 
 class _StepTimer:
-    """Per-stage wall clock. Laps are always collected (a handful of
-    monotonic() calls per round) and returned in the round stats, so the
-    bench can report a data-phase vs coordination split; printing stays
-    behind PEGASUS_DEBUG_TIMING."""
+    """Per-stage wall clock. Laps are always collected and returned in
+    the round stats (data-phase vs coordination split); each lap is also
+    logged at DEBUG level on the ``pegasus_spark`` logger."""
 
-    def __init__(self, rnd: int):
-        self.rnd = rnd
+    def __init__(self, tag: str):
+        self.tag = tag
         self.t = time.monotonic()
         self.laps: dict[str, float] = {}
 
     def lap(self, label: str) -> None:
         now = time.monotonic()
         self.laps[label] = self.laps.get(label, 0.0) + (now - self.t)
-        if _TIMING:
-            print(f"    [r{self.rnd}] {label}: {now - self.t:.2f}s", flush=True)
+        log.debug("[%s] %s: %.2fs", self.tag, label, now - self.t)
         self.t = now
 
 
@@ -291,7 +293,7 @@ def run_round(ctx: RoundContext, r: int, visited_total: int) -> dict:
 
 def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
     t_start = time.monotonic()
-    st_t = _StepTimer(r)
+    st_t = _StepTimer(f"r{r}")
     cfg = ctx.cfg
     W = cfg.round_width
     round_start, round_end = r * W, (r + 1) * W

@@ -128,7 +128,9 @@ class SeenSet:
         co-grouped with that partition's single bloom row, so each task
         probes against exactly one bloom — no driver collect, no
         full-bloom-set broadcast (the round-1 design funneled all bloom
-        bytes through the driver; at 2048×48 MB that is a driver OOM)."""
+        bytes through the driver; at 2048×48 MB that is a driver OOM).
+        A bloom left behind by deferred merges is rebuilt first."""
+        self._ensure_bloom_covers()
         if self.cat.is_empty("bloom"):
             return df.withColumn("maybe_seen", F.lit(False))
         added_part = "part_id" not in df.columns
@@ -180,10 +182,6 @@ class SeenSet:
                 and approx_seen_rows < self.probe_min_rows):
             probed = df.withColumn("maybe_seen", F.lit(True))
         else:
-            # deferred merges (add(defer_bloom=True)) leave the bloom
-            # behind the exact set; bring it up to date BEFORE the first
-            # probe (one-time full rebuild at the threshold crossing)
-            self._ensure_bloom_covers()
             probed = self.split_maybe_seen(df, col)
         seen = self._exact().select(F.col("url_hash").alias("_seen_hash"))
         cond = F.col("maybe_seen") & (F.col(col) == F.col("_seen_hash"))

@@ -7,10 +7,15 @@ engine models that as a driver loop; this module recovers the
 *continuous* shape with Structured Streaming: a directory of seed-batch
 parquet files is an unbounded source, and ``foreachBatch`` folds each
 arriving seed batch into the SAME durable crawl state (frontier / seen /
-corpus tables + checkpoints), then drains the frontier with the ordinary
-round function. Exactly-once-ish: the engine's own enqueue dedup makes
-seed redelivery idempotent, and Spark's streaming checkpoint tracks
+corpus tables + checkpoints) with ``crawl``'s seed commit, then drains
+the frontier with ``crawl``'s round loop — same stop rules, checkpoints,
+compaction and resume. Exactly-once-ish: the engine's own enqueue dedup
+makes seed redelivery idempotent, and Spark's streaming checkpoint tracks
 which seed files were consumed.
+
+Stop semantics: ``max_rounds`` is an absolute round cap; an ``exhausted``
+stop idles until the next seed batch; any other stop is terminal (later
+batches inject nothing and run no rounds).
 
 No watermarks/event-time needed: politeness windows are virtual-time
 arithmetic, not stream-time windows (SURVEY.md §2 O3).
@@ -21,8 +26,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..config import CrawlConfig
-from ..crawl import TABLES, _make_ctx
-from ..round import frontier_exhausts_after, inject_seeds, run_round
+from ..crawl import _commit_seeds, _open, _run_rounds
 
 
 def stream_crawl(
@@ -31,44 +35,27 @@ def stream_crawl(
     seeds_stream_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    rounds_per_batch: int | None = None,
 ):
-    """Start a streaming crawl over arriving seed batches.
+    """Start a streaming crawl over arriving seed batches, resuming from
+    ``cfg.job_dir``'s checkpoints if it has any. Each micro-batch commits
+    its seeds, then runs crawl rounds until a stop rule fires. Returns
+    the StreamingQuery."""
+    ctx, ckpt, latest = _open(spark, cfg, resume=True)
 
-    Each micro-batch: canonicalize+dedupe+enqueue the new seeds, then run
-    crawl rounds until the frontier is exhausted (or ``rounds_per_batch``
-    is hit — backpressure knob). Returns the StreamingQuery.
-    """
-    ctx, ckpt = _make_ctx(spark, cfg)
-
-    state = {"round": 0, "visited": 0}
-    latest = ckpt.latest()
+    state = {"round": 0, "visited": 0, "reason": None}
     if latest is not None:
-        state["round"] = latest["round"] + 1
-        state["visited"] = latest["visited"]
-        # floor-safe frontier-size seed for the size-adaptive plan gates
-        # (same as crawl.crawl on resume — see RoundContext)
-        ctx.approx_frontier_rows = latest["visited"]
+        state.update(round=latest["round"] + 1, visited=latest["visited"],
+                     reason=latest["reason"] if latest.get("stopped") else None)
 
     def process_batch(batch_df, batch_id: int):
-        inject_seeds(ctx, batch_df.select("url", "priority"))
-        budget = rounds_per_batch or cfg.max_rounds
-        for _ in range(budget):
-            r = state["round"]
-            st = run_round(ctx, r, state["visited"])
-            state["visited"] += st["fetched"]
-            state["round"] += 1
-            ckpt.save(r, {
-                "versions": ctx.cat.snapshot(TABLES),
-                "visited": state["visited"],
-                "stopped": False, "reason": None,
-                "stats": {k: v for k, v in st.items() if k != "round"},
-            })
-            if st["exhausted"] or frontier_exhausts_after(st):
-                # the second arm stops without paying the empty probe
-                # round (same rule as crawl.crawl); a later seed batch
-                # simply continues from this round number
-                break
+        if (state["reason"] not in (None, "exhausted")
+                or state["round"] >= cfg.max_rounds):
+            return  # terminal stop: later seed batches are not crawled
+        _commit_seeds(ctx, ckpt, batch_df.select("url", "priority"),
+                      state["round"], state["visited"])
+        res = _run_rounds(ctx, ckpt, state["round"], state["visited"])
+        state.update(round=state["round"] + res.rounds, visited=res.visited,
+                     reason=res.stop_reason)
 
     stream = (
         spark.readStream.schema("url string, priority int")

@@ -176,10 +176,11 @@ class ManifestCatalog:
             return self.read_bucketed(name, version)
         dirs = []
         for d in m["dirs"]:
-            if os.path.isdir(d):
-                dirs.extend(
-                    os.path.join(d, leaf) for leaf in sorted(os.listdir(d))
-                    if leaf.startswith("_bucket="))
+            if not os.path.isdir(d):  # (absent leaf buckets are just empty)
+                raise FileNotFoundError(f"table {name!r} commit dir {d!r} is missing")
+            dirs.extend(
+                os.path.join(d, leaf) for leaf in sorted(os.listdir(d))
+                if leaf.startswith("_bucket="))
         if not dirs:
             return self.spark.createDataFrame([], m["schema_ddl"])
         return self.spark.read.schema(m["schema_ddl"]).parquet(*dirs)

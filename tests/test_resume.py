@@ -10,6 +10,8 @@ import pytest
 from pegasus_spark.config import CrawlConfig
 from pegasus_spark.crawl import crawl
 from pegasus_spark.fixtures import WebParams, generate_web, write_web
+from pegasus_spark.round import FRONTIER_DDL
+from pegasus_spark.streaming.stream_crawl import stream_crawl
 from pegasus_spark.tables import CheckpointStore, ManifestCatalog
 
 PARAMS = WebParams(seed=21, n_pages=150, n_hosts=6, fanout=3.0, n_seeds=3)
@@ -109,3 +111,23 @@ def test_restore_rolls_back_partial_commits(spark, web_dir, tmp_path):
     assert cat.current_version("corpus") != committed["corpus"]
     cat.restore(committed)
     assert cat.current_version("corpus") == committed["corpus"]
+
+
+def test_both_drivers_refuse_stale_job_dir(spark, web_dir, tmp_path):
+    """The shared start-up step: tables with no checkpoint (a crash before
+    the first commit) are refused by both drivers, with or without
+    resume; checkpoints without resume=True are refused too."""
+    job = str(tmp_path / "job")
+    cat = ManifestCatalog(spark, job)
+    cat.create("frontier", FRONTIER_DDL)
+    cat.append("frontier", spark.createDataFrame(
+        [("http://h0.test/a", 1, "h0.test", 0, 0, None)], FRONTIER_DDL))
+    cfg = CrawlConfig(web_dir=web_dir, job_dir=job, seen_parts=4)
+    for resume in (False, True):
+        with pytest.raises(ValueError, match="no checkpoint"):
+            crawl(spark, cfg, resume=resume)
+    with pytest.raises(ValueError, match="no checkpoint"):
+        stream_crawl(spark, cfg, str(tmp_path / "seeds"), str(tmp_path / "ckpt"))
+    CheckpointStore(job).save(0, {"versions": {}, "visited": 0, "stopped": False})
+    with pytest.raises(ValueError, match="prior crawl"):
+        crawl(spark, cfg)

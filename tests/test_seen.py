@@ -145,3 +145,17 @@ def test_deferred_bloom_skip_and_rebuild_at_crossing(spark, cat):
     s.add(_hashes_df(spark, range(100, 120)))
     probed = s.split_maybe_seen(_hashes_df(spark, range(100, 120)))
     assert probed.filter("NOT maybe_seen").count() == 0
+
+
+def test_split_maybe_seen_sound_after_deferred_add(spark, cat):
+    """A deferred merge leaves the bloom behind the exact set (empty, or
+    missing the deferred hashes); a direct split_maybe_seen must bring it
+    up to date first, so every added hash still probes maybe_seen=True."""
+    s = SeenSet(cat, n_parts=2)
+    s.add(_hashes_df(spark, range(50)), defer_bloom=True)
+    probed = s.split_maybe_seen(_hashes_df(spark, range(50)))
+    assert probed.filter("NOT maybe_seen").count() == 0
+    # and over a non-empty bloom that lacks the deferred hashes
+    s.add(_hashes_df(spark, range(1000, 1050)), defer_bloom=True)
+    probed = s.split_maybe_seen(_hashes_df(spark, range(1000, 1050)))
+    assert probed.filter("NOT maybe_seen").count() == 0

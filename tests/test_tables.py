@@ -142,3 +142,18 @@ def test_table_write_options_survive_compaction(spark, cat, tmp_path):
             comp = sum(rg.column(c).total_compressed_size
                        for c in range(rg.num_columns))
             assert comp < 20 * 1024 * 1024, comp
+
+
+def test_bucketed_read_missing_commit_dir_raises(spark, cat):
+    """A commit dir listed in a bucketed table's manifest but gone from
+    disk is a lost commit: read() must fail, not return fewer rows. Absent
+    leaf _bucket=b dirs (empty buckets) stay legitimate."""
+    import shutil
+
+    cat.create("t", "a long", bucket_by=("a", 4))
+    cat.append("t", spark.range(8).selectExpr("id as a"))
+    cat.append("t", spark.range(8, 9).selectExpr("id as a"))  # one bucket
+    assert cat.read("t").count() == 9
+    shutil.rmtree(cat._manifest("t")["dirs"][0])
+    with pytest.raises(FileNotFoundError, match="missing"):
+        cat.read("t")
