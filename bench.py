@@ -154,7 +154,7 @@ def crawl_bench(spark, n_pages: int, verbose: bool = False,
 
             B = int(os.environ.get("PEGASUS_STORE_BUCKETS", "16"))
             bdir = bucketize_store(spark, web_dir, B)
-            extra = dict(pages_bucketed_dir=bdir, store_bucket_count=B)
+            extra = dict(pages_bucketed_dir=bdir)
         return _run_crawl(
             spark, web_dir, round_width_vt=2_000_000,
             verbose=verbose, cache_pages=False,

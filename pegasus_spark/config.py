@@ -108,15 +108,15 @@ class CrawlConfig:
         "parquet.enable.dictionary": "false",
     })
     # bucket-partitioned layouts (Iceberg bucket(B, url_hash) transform
-    # analogue — see tables.ManifestCatalog.create / fetch.bucketize_store):
-    # pages_bucketed_dir points at a bucketize_store() relayout of the
-    # page store; store_bucket_count enables the SPJ-shaped bucket-wise
-    # fetch join for giant rounds past fetch_broadcast_max (must equal
-    # the relayout's B). table_bucket_count>0 creates frontier+corpus
-    # bucket-partitioned and runs the pending anti-join bucket-wise —
-    # the zero-data-shuffle dedup shape for 10^10-row frontiers.
+    # analogue — see tables.bucketwise_join): pages_bucketed_dir points at
+    # a fetch.bucketize_store() relayout of the page store, whose B is
+    # read from the relayout itself; giant rounds past
+    # fetch_broadcast_max then fetch and extract bucket-wise.
+    # table_bucket_count>0 creates frontier+corpus bucket-partitioned (a
+    # resume keeps the B the tables were created with) and runs the
+    # pending anti-join bucket-wise — the zero-data-shuffle dedup shape
+    # for 10^10-row frontiers.
     pages_bucketed_dir: Optional[str] = None
-    store_bucket_count: int = 0
     table_bucket_count: int = 0
     # incremental catalog compaction (Iceberg rewrite_data_files
     # analogue): every compact_every rounds, the append-heavy tables are

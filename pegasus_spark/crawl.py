@@ -49,7 +49,7 @@ from .seen import SeenSet
 from .tables import CheckpointStore, ManifestCatalog
 from .fetch import load_pages, store_has_flaky, store_has_lossy, store_has_redirects
 
-TABLES = ["frontier", "corpus", "hosts", "metrics", "seen", "bloom", "robots",
+TABLES = ["frontier", "corpus", "hosts", "metrics", "bloom", "robots",
           "redirects", "retries"]
 
 
@@ -240,11 +240,11 @@ def _run_rounds(ctx: RoundContext, ckpt: CheckpointStore, r: int,
             # the pre-compaction snapshot; merged dirs stay on disk for
             # time travel). Row sets are unchanged, so fetch order,
             # parity and golden traces are unaffected.
-            # seen appends only in overflow mode and robots only in
-            # discover mode; compact() is a no-op at ≤ target dirs
+            # robots appends only in discover mode; compact() is a
+            # no-op at ≤ target dirs
             c0 = time.monotonic()
             for t in ("frontier", "corpus", "redirects", "retries",
-                      "metrics", "seen", "robots"):
+                      "metrics", "robots"):
                 cat.compact(t, cfg.compact_target_dirs)
             res.compact_sec += time.monotonic() - c0
     res.compact_sec = round(res.compact_sec, 2)

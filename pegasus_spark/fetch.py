@@ -20,12 +20,15 @@ buckets instead of pinning one task (north-rule skew handling).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import codec
 from .codec import phash as _phash, psnr as _psnr
+from .tables import bucket_of, bucketwise_join
 
 PAGE_COLS = [
     "url_hash", "image_id", "bytes", "w", "h", "fmt",
@@ -33,11 +36,17 @@ PAGE_COLS = [
 ]
 
 
+# B of a bucketize_store relayout, recorded beside its parquet files
+_BUCKET_COUNT = "_BUCKET_COUNT"
+
+
 def load_pages(spark: SparkSession, web_dir: str,
                bucketed_dir: str | None = None) -> DataFrame:
     """Open the page store. ``bucketed_dir`` (see ``bucketize_store``)
     opens the bucket-partitioned layout instead — same rows, plus a
-    ``_bucket`` partition column that downstream joins can prune on."""
+    ``_bucket`` partition column that downstream joins can prune on. The
+    relayout's B is read from its record once, here, and rides on that
+    column's metadata (``store_bucket_count``)."""
     df = spark.read.parquet(bucketed_dir or f"{web_dir}/pages.parquet")
     cols = PAGE_COLS + (["ref_md5"] if "ref_md5" in df.columns else [])
     df = df.select(*cols, *(c for c in ("redirect_to", "flaky_until_round", "_bucket")
@@ -48,6 +57,9 @@ def load_pages(spark: SparkSession, web_dir: str,
         df = df.withColumn("redirect_to", F.lit(None).cast("string"))
     if "flaky_until_round" not in df.columns:
         df = df.withColumn("flaky_until_round", F.lit(0).cast("int"))
+    if bucketed_dir:
+        with open(os.path.join(bucketed_dir, _BUCKET_COUNT)) as f:
+            df = df.withMetadata("_bucket", {"bucket_count": int(f.read())})
     return df
 
 
@@ -57,15 +69,15 @@ def bucketize_store(spark: SparkSession, web_dir: str, n_buckets: int) -> str:
     fixture). The 10^10-scale page store lives as a bucket-partitioned
     Iceberg table — layout is a property of the data at rest, not of any
     one crawl job — and this produces the sandbox equivalent so the
-    giant-round fetch join can run bucket-wise (``bucketed_store_join``)
-    instead of shuffling payload bytes.
+    giant-round fetch and extract joins can run bucket-wise
+    (``tables.bucketwise_join``) instead of shuffling payload bytes. B is
+    recorded beside the output, so readers take it from the data.
 
     The cache key includes a fingerprint of the SOURCE files (paths,
     sizes, mtimes): a pages.parquet regenerated in the same web_dir gets
     a fresh relayout instead of silently reusing the stale one (ADVICE
     r4 #3)."""
     import hashlib
-    import os
 
     src = f"{web_dir}/pages.parquet"
     h = hashlib.sha256()
@@ -79,11 +91,10 @@ def bucketize_store(spark: SparkSession, web_dir: str, n_buckets: int) -> str:
         st = os.stat(src)
         h.update(f"{st.st_size}|{st.st_mtime_ns}".encode())
     out = f"{web_dir}/pages_bucketed_{n_buckets}_{h.hexdigest()[:12]}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    if not all(os.path.exists(os.path.join(out, f)) for f in ("_SUCCESS", _BUCKET_COUNT)):
         (
             spark.read.parquet(f"{web_dir}/pages.parquet")
-            .withColumn("_bucket",
-                        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
+            .withColumn("_bucket", bucket_of("url_hash", n_buckets))
             .repartition(n_buckets, "_bucket")
             .write.mode("overwrite").partitionBy("_bucket")
             # blob-table writer shape (small row groups, no dictionary) —
@@ -92,50 +103,17 @@ def bucketize_store(spark: SparkSession, web_dir: str, n_buckets: int) -> str:
             .option("parquet.enable.dictionary", "false")
             .parquet(out)
         )
+        with open(os.path.join(out, _BUCKET_COUNT), "w") as f:
+            f.write(str(n_buckets))
     return out
 
 
-def bucketed_store_join(pages: DataFrame, loadable: DataFrame,
-                        n_buckets: int) -> tuple[DataFrame, DataFrame]:
-    """Bucket-wise fetch join — the sandbox analogue of an Iceberg
-    storage-partitioned join (SPJ) on a ``bucket(B, url_hash)`` table.
-
-    The fat store side is directory-pruned per bucket and NEVER shuffled
-    or globally broadcast; the selection (past the global broadcast
-    ceiling, but skinny) is sliced per bucket by the same pmod and each
-    1/B slice broadcasts into only its matching bucket scan. Total
-    traffic: B broadcasts of |selection|/B rows — at the 10^10 design
-    point (B=1024, a 10^8-row round) each slice is ~10^5 skinny rows,
-    well inside executor memory, while the payload bytes move zero times.
-    On a real Iceberg catalog Spark ≥3.3 plans this natively from the
-    table's partition transform; here the per-bucket union IS the plan.
-
-    Returns (inner, missing): store⋈selection rows and selection rows
-    with no store page (HTTP-404 analogue), both per the caller's
-    ``_final_hash`` key.
-    """
-    inner_parts, missing_parts = [], []
-    # NULL join keys (junk-Location dangling rows) belong to no bucket:
-    # route them straight to the missing side (same outcome as the
-    # non-bucketed anti-join, where a NULL key never matches)
-    missing_parts.append(loadable.where(F.col("_final_hash").isNull()))
-    for b in range(n_buckets):
-        sel_b = loadable.where(
-            F.pmod(F.col("_final_hash"), F.lit(n_buckets)) == b)
-        pg_b = pages.where(F.col("_bucket") == b).drop("_bucket")
-        inner_parts.append(pg_b.join(F.broadcast(sel_b), "_final_hash", "inner"))
-        # 404 check per bucket: the store's KEY column (column-pruned,
-        # 8 B/row → |store|/B keys ≈ 80 MB at the design point) broadcasts
-        # the other way
-        missing_parts.append(sel_b.join(
-            F.broadcast(pg_b.select("_final_hash")), "_final_hash", "left_anti"))
-    inner = inner_parts[0]
-    for p in inner_parts[1:]:
-        inner = inner.unionByName(p)
-    missing = missing_parts[0]
-    for p in missing_parts[1:]:
-        missing = missing.unionByName(p)
-    return inner, missing
+def store_bucket_count(pages: DataFrame) -> int:
+    """B of a page store opened from a ``bucketize_store`` relayout (0
+    for the plain store). Schema metadata only — costs no Spark job."""
+    if "_bucket" not in pages.columns:
+        return 0
+    return pages.schema["_bucket"].metadata.get("bucket_count", 0)
 
 
 def store_has_lossy(pages: DataFrame) -> bool:
@@ -404,7 +382,6 @@ def fetch_and_validate(
     broadcast_max: int = 2_000_000,
     has_lossy: bool | None = None,
     mapping: DataFrame | None = None,
-    store_buckets: int = 0,
 ) -> DataFrame:
     """Join selected frontier rows against the page store and validate.
 
@@ -417,6 +394,10 @@ def fetch_and_validate(
     final_url, fetch_status). Rows mapped to a NOLOAD status skip the
     payload join entirely; 'redirect' rows load the FINAL page's payload
     and validate it as usual, with final_url recorded on the corpus row.
+
+    A giant round (past ``broadcast_max``) over a ``bucketize_store``
+    relayout joins bucket-wise (``store_bucket_count`` B from the store):
+    the payload bytes are never shuffled or globally broadcast.
     """
     # host_bucket is a lineage/metrics column; the PHYSICAL skew-spread of
     # the decode stage comes for free from hash partitioning on url_hash —
@@ -488,14 +469,27 @@ def fetch_and_validate(
         else:
             pages = pages.withColumn("_ref_lossy", F.lit(None).cast("binary"))
         pages = pages.drop("pixels_ref", "ref_md5")
+    nb = store_bucket_count(pages)
     pages = pages.withColumnRenamed("url_hash", "_final_hash")
-    if not small and store_buckets > 0 and "_bucket" in pages.columns:
-        # giant-round path over a bucket-partitioned store: SPJ-shaped
-        # bucket-wise join, zero payload shuffle (see bucketed_store_join)
-        inner, missing = bucketed_store_join(pages, loadable, store_buckets)
+    if not small and nb:
+        # giant-round path over the bucketed store: the 1/B selection
+        # slices broadcast into their bucket scans; for the 404 check each
+        # bucket's store KEY column (8 B/row → |store|/B keys ≈ 80 MB at
+        # the design point) broadcasts the other way. NULL keys
+        # (junk-Location dangling rows) have no bucket: straight to
+        # missing, as in the plain anti-join where they never match
+        def page_b(b):
+            return pages.where(F.col("_bucket") == b).drop("_bucket")
+
+        def sel_b(b):
+            return loadable.where(bucket_of("_final_hash", nb) == b)
+
+        inner = bucketwise_join(nb, page_b, sel_b, "_final_hash", "inner")
+        missing = loadable.where(F.col("_final_hash").isNull()).unionByName(
+            bucketwise_join(nb, sel_b, lambda b: page_b(b).select("_final_hash"),
+                            "_final_hash", "left_anti"))
     else:
-        if "_bucket" in pages.columns:
-            pages = pages.drop("_bucket")
+        pages = pages.drop("_bucket")
         sel_in = F.broadcast(loadable) if small else loadable
         keys_in = (F.broadcast(pages.select("_final_hash")) if small
                    else pages.select("_final_hash"))

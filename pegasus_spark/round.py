@@ -30,10 +30,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from . import politeness
 from .canon import resolve_canonicalize
 from .config import CrawlConfig
-from .fetch import fetch_and_validate
+from .fetch import fetch_and_validate, store_bucket_count
 from .lineage import free_checkpoint
 from .seen import SeenSet
-from .tables import ManifestCatalog
+from .tables import ManifestCatalog, bucket_of, bucketwise_join
 
 FRONTIER_DDL = (
     "url string, url_hash long, host string, priority int, "
@@ -304,7 +304,6 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         ctx.crawl_delays = ctx.robots.crawl_delays()
         ctx.gate = ctx.robots.gate()
 
-    frontier = ctx.cat.read("frontier")
     has_redirects, has_flaky = ctx.has_redirects, ctx.has_flaky
     visited_hashes = ctx.cat.read("corpus").select("url_hash")
     if has_redirects:
@@ -314,7 +313,7 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         # this round's rows into its own dedup
         visited_hashes = visited_hashes.unionByName(
             ctx.cat.read("redirects").select("url_hash"))
-    tb = cfg.table_bucket_count
+    spec = ctx.cat.bucket_spec("frontier")
     # SPJ size gate (same counter as the bloom/prune gates): the
     # bucket-wise anti-join exists so that at 10^10 rows NEITHER
     # data-sized table is hash-shuffled or globally broadcast — but its
@@ -328,41 +327,30 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
     # shape itself stays pinned by
     # test_bucketed.py::test_bucketed_crawl_equivalence (which forces
     # the gate with bloom_probe_min_rows=0).
-    use_spj = (tb > 0 and ctx.cat.bucket_spec("frontier")
-               and ctx.approx_frontier_rows >= cfg.bloom_probe_min_rows)
-    if use_spj:
-        # bucket-wise pending anti-join (Iceberg SPJ analogue): frontier
-        # and corpus share the bucket(B, url_hash) layout, so the dedup
-        # runs as B directory-listed sub-joins — each visited slice
-        # (1/B of the visited set, key column only) broadcasts into its
-        # matching frontier bucket scan; neither data-sized table is
-        # ever hash-shuffled. At 10^10 rows / B=1024 a slice is ~10^7
-        # keys ≈ 80 MB — the bounded build side SPJ would give natively.
-        # read_bucket (one multi-path relation per bucket, O(B) plan
-        # nodes) — NOT read_bucketed().where(): that embeds the R-commit
-        # union in every bucket branch and the O(B·R) plan OOMs the
-        # driver as the crawl ages (see tables.read_bucket docstring).
-        vparts = []
-        for b in range(tb):
+    if spec is not None and ctx.approx_frontier_rows >= cfg.bloom_probe_min_rows:
+        # frontier and corpus share the bucket(B, url_hash) layout, so
+        # each visited slice (1/B of the visited set, key column only)
+        # broadcasts into its matching frontier bucket scan. B is the
+        # tables' own (create() keeps the spec a crawl started with), not
+        # the config's: a resume under another table_bucket_count must
+        # still cover every frontier bucket.
+        nb = spec[1]
+
+        def visited_b(b):
             v_b = ctx.cat.read_bucket("corpus", b).select("url_hash")
             if has_redirects:
-                v_b = v_b.unionByName(
-                    ctx.cat.read("redirects").select("url_hash")
-                    .where(F.pmod(F.col("url_hash"), F.lit(tb)) == b))
-            vparts.append(
-                ctx.cat.read_bucket("frontier", b)
-                .join(F.broadcast(v_b), "url_hash", "left_anti"))
-        pending = vparts[0]
-        for p in vparts[1:]:
-            pending = pending.unionByName(p)
-        pending = pending.join(ctx.crawl_delays, "host", "left")
+                v_b = v_b.unionByName(ctx.cat.read("redirects").select("url_hash")
+                                      .where(bucket_of("url_hash", nb) == b))
+            return v_b
+
+        pending = bucketwise_join(nb, lambda b: ctx.cat.read_bucket("frontier", b),
+                                  visited_b, "url_hash", "left_anti")
     else:
-        # no broadcast hint on the delays side: Catalyst auto-broadcasts
-        # while the robots table is under the threshold and shuffle-joins
-        # past it (10^8 hosts) — same policy as the rules gate
-        pending = frontier.join(visited_hashes, "url_hash", "left_anti").join(
-            ctx.crawl_delays, "host", "left"
-        )
+        pending = ctx.cat.read("frontier").join(visited_hashes, "url_hash", "left_anti")
+    # no broadcast hint on the delays side: Catalyst auto-broadcasts
+    # while the robots table is under the threshold and shuffle-joins
+    # past it (10^8 hosts) — same policy as the rules gate
+    pending = pending.join(ctx.crawl_delays, "host", "left")
     host_state = ctx.cat.read("hosts")
 
     sched = politeness.schedule(
@@ -492,7 +480,6 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         has_lossy=ctx.has_lossy,
         mapping=(mapping.select("url_hash", "final_hash", "final_url", "fetch_status")
                  if mapping is not None else None),
-        store_buckets=cfg.store_bucket_count,
     )
 
     # per-bucket lineage counts ride the corpus write via observe():
@@ -557,20 +544,17 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
             # content-type gate (pegasus drops non-HTML before extraction):
             # non-crawlable payloads stay fetched/visited, yield no links
             page_links = page_links.filter(F.col("fmt").isin(list(cfg.extract_fmts)))
-        sb = cfg.store_bucket_count
-        if not bcast_sel and sb > 0 and "_bucket" in page_links.columns:
+        sb = store_bucket_count(ctx.pages)
+        if not bcast_sel and sb:
             # giant-round path over the bucketed store: same SPJ shape as
             # the fetch join — out_links scan pruned per bucket, 1/B
             # selection slices broadcast, zero shuffle
-            parts = []
-            for b in range(sb):
-                sk_b = sel_keys.where(F.pmod(F.col("_content_hash"), F.lit(sb)) == b)
-                pl_b = (page_links.where(F.col("_bucket") == b)
-                        .select(F.col("url_hash").alias("_content_hash"), "out_links"))
-                parts.append(pl_b.join(F.broadcast(sk_b), "_content_hash", "inner"))
-            joined_links = parts[0]
-            for p in parts[1:]:
-                joined_links = joined_links.unionByName(p)
+            joined_links = bucketwise_join(
+                sb,
+                lambda b: (page_links.where(F.col("_bucket") == b)
+                           .select(F.col("url_hash").alias("_content_hash"), "out_links")),
+                lambda b: sel_keys.where(bucket_of("_content_hash", sb) == b),
+                "_content_hash", "inner")
         else:
             sel_in = F.broadcast(sel_keys) if bcast_sel else sel_keys
             joined_links = (

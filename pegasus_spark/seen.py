@@ -74,7 +74,7 @@ class SeenSet:
         exact ever-enqueued DataFrame (must carry ``url_hash``). When
         set, the exact seen set is a PROJECTION of that source (the
         crawl passes the frontier table — its url_hash column IS the
-        seen set, so the separate ``seen`` table append is skipped: one
+        seen set, so no separate ``seen`` table is created or appended: one
         fewer Spark job per round, and at the 10^10 design point one
         fewer 80 GB duplicate table). The bloom table is maintained
         either way; standalone uses (no source) keep the exact table.
@@ -104,7 +104,8 @@ class SeenSet:
         # None = unknown (fresh instance — a prior deferring run may have
         # left the table behind); True = verified/maintained in sync
         self._bloom_synced: bool | None = None
-        catalog.create("seen", SEEN_DDL)
+        if exact_source is None:
+            catalog.create("seen", SEEN_DDL)
         catalog.create("bloom", BLOOM_DDL)
 
     def _exact(self) -> DataFrame:

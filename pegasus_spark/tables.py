@@ -28,10 +28,35 @@ import os
 import threading
 import uuid
 from contextlib import contextmanager
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+
+def bucket_of(col: str | Column, n: int) -> Column:
+    """The ``bucket(n, col)`` layout: a row's bucket is ``pmod(col, n)``.
+    Every bucket assignment and bucket slice goes through here, so a
+    table, the bucketized page store and the slices joined against them
+    always agree. A NULL key has no bucket."""
+    return F.pmod(F.col(col) if isinstance(col, str) else col, F.lit(n)).cast("int")
+
+
+def bucketwise_join(n: int, big, small, key: str, how: str) -> DataFrame:
+    """Bucket-wise join over a ``bucket(n, key)`` layout — the sandbox
+    analogue of an Iceberg storage-partitioned join (SPJ): the union over
+    ``b < n`` of ``big(b).join(F.broadcast(small(b)), key, how)``, where
+    ``big(b)``/``small(b)`` return bucket ``b``'s rows of each side.
+
+    The big side is never shuffled or globally broadcast: each small
+    slice (1/n of its side) broadcasts into only its matching bucket of
+    the big side. At the 10^10 design point (n=1024) a slice is ~10^7
+    keys, a bounded build side, and the data-sized side moves zero
+    times. Rows with a NULL key belong to no bucket; callers that must
+    keep them route them around the join."""
+    return reduce(DataFrame.unionByName,
+                  (big(b).join(F.broadcast(small(b)), key, how) for b in range(n)))
 
 
 class ManifestCatalog:
@@ -63,10 +88,10 @@ class ManifestCatalog:
 
         ``bucket_by=(col, B)`` is the Iceberg ``bucket(B, col)`` partition
         transform analogue: every write hash-distributes rows into B
-        directory partitions (``_bucket=<pmod(col, B)>``), recorded in the
-        manifest as a table property. Two tables bucketed the same way
+        directory partitions (``_bucket=<bucket_of(col, B)>``), recorded in
+        the manifest as a table property. Two tables bucketed the same way
         join bucket-by-bucket with no data-sized shuffle (Iceberg's
-        storage-partitioned join) — see ``fetch.bucketed_store_join``.
+        storage-partitioned join) — see ``bucketwise_join``.
 
         ``write_options`` are per-table writer defaults (Iceberg
         per-table write properties analogue, e.g. parquet.block.size for
@@ -164,86 +189,62 @@ class ManifestCatalog:
 
         Bucketed tables are read as ONE flat multi-path relation over
         the per-bucket LEAF directories (which hold plain files —
-        ``partitionBy`` strips the partition column), not via
-        ``read_bucketed``'s per-commit union: the union exists only
-        because multi-root partition DISCOVERY trips
-        CONFLICTING_DIRECTORY_STRUCTURES, and a logical read needs no
-        ``_bucket`` column — one relation keeps bucketed-table reads at
-        plain-table planning cost (an R-branch union per read was the
-        main residual per-round overhead of the bucketed crawl layout)."""
+        ``partitionBy`` strips the partition column): a multi-root read
+        of the commit dirs themselves trips partition discovery
+        (CONFLICTING_DIRECTORY_STRUCTURES), and a per-commit union costs
+        one plan branch per commit on every read (it was the main
+        residual per-round overhead of the bucketed crawl layout)."""
         m = self._manifest(name, version)
         if not m.get("bucket_by"):
-            return self.read_bucketed(name, version)
-        dirs = []
-        for d in m["dirs"]:
-            if not os.path.isdir(d):  # (absent leaf buckets are just empty)
-                raise FileNotFoundError(f"table {name!r} commit dir {d!r} is missing")
-            dirs.extend(
-                os.path.join(d, leaf) for leaf in sorted(os.listdir(d))
-                if leaf.startswith("_bucket="))
-        if not dirs:
-            return self.spark.createDataFrame([], m["schema_ddl"])
-        return self.spark.read.schema(m["schema_ddl"]).parquet(*dirs)
-
-    def read_bucketed(self, name: str, version: int | None = None) -> DataFrame:
-        """Snapshot INCLUDING the ``_bucket`` partition column (bucketed
-        tables only). A filter on ``_bucket`` prunes whole directories at
-        planning time — the physical handle for bucket-wise joins."""
-        m = self._manifest(name, version)
-        spec = m.get("bucket_by")
-        ddl = m["schema_ddl"] + (", _bucket int" if spec else "")
-        if not m["dirs"]:
-            return self.spark.createDataFrame([], ddl)
-        if not spec:
-            return self.spark.read.schema(ddl).parquet(*m["dirs"])
-        # bucketed commits each carry their own _bucket=N partition tree;
-        # a multi-root read trips Spark's partition discovery
-        # (CONFLICTING_DIRECTORY_STRUCTURES), so read per commit dir and
-        # union — a _bucket filter still prunes directories inside EVERY
-        # branch's scan (partition filters push through union)
-        parts = [self.spark.read.schema(ddl).parquet(d) for d in m["dirs"]]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+            return self._scan(m, m["dirs"])
+        return self._scan(m, [os.path.join(d, leaf)
+                              for d in self._commit_dirs(name, m)
+                              for leaf in sorted(os.listdir(d))
+                              if leaf.startswith("_bucket=")])
 
     def read_bucket(self, name: str, bucket: int,
                     version: int | None = None) -> DataFrame:
-        """ONE bucket's rows across all commits, as a SINGLE relation.
+        """ONE bucket's rows across all commits, as a SINGLE relation —
+        the big side of ``bucketwise_join``.
 
-        The bucket-wise join loops must NOT be built on
-        ``read_bucketed(...).where(_bucket == b)``: that embeds the full
-        per-commit union (R branches after R rounds) inside every one of
-        the B bucket branches — O(B·R) plan nodes, which grows with
-        crawl length and OOMs the driver long before the data does
-        (measured: a 1 GB driver died at B=8, R≈10 during plan
-        analysis). Listing just this bucket's leaf directories collapses
-        that to one multi-path relation per bucket: O(B) plan nodes
-        total, independent of round count. (A real Iceberg catalog gets
-        this for free — one scan node, manifest-pruned.)"""
+        Listing just this bucket's leaf directories keeps a B-way
+        bucket-wise join at O(B) plan nodes, independent of round count;
+        filtering a per-commit union on ``_bucket`` instead embeds the
+        R-commit union in every one of the B branches — O(B·R) plan
+        nodes, which OOMed a 1 GB driver at B=8, R≈10 during plan
+        analysis. (A real Iceberg catalog gets this for free — one scan
+        node, manifest-pruned.)"""
         m = self._manifest(name, version)
-        spec = m.get("bucket_by")
-        if not spec:
+        if not m.get("bucket_by"):
             raise ValueError(f"{name} is not bucketed")
-        dirs = [p for d in m["dirs"]
-                if os.path.isdir(p := os.path.join(d, f"_bucket={bucket}"))]
+        return self._scan(m, [p for d in self._commit_dirs(name, m)
+                              if os.path.isdir(p := os.path.join(d, f"_bucket={bucket}"))])
+
+    @staticmethod
+    def _commit_dirs(name: str, m: dict) -> list[str]:
+        """A bucketed manifest's commit dirs, each checked on disk: a
+        missing one is a lost commit and must not read as fewer rows
+        (an absent LEAF ``_bucket=b`` dir is just an empty bucket)."""
+        for d in m["dirs"]:
+            if not os.path.isdir(d):
+                raise FileNotFoundError(f"table {name!r} commit dir {d!r} is missing")
+        return m["dirs"]
+
+    def _scan(self, m: dict, dirs: list[str]) -> DataFrame:
+        # leaf dirs hold plain files, so a multi-root read is safe
         if not dirs:
             return self.spark.createDataFrame([], m["schema_ddl"])
-        # leaf dirs hold plain files (partitionBy strips _bucket), so a
-        # multi-root read is safe — no partition discovery conflict
         return self.spark.read.schema(m["schema_ddl"]).parquet(*dirs)
 
     def _write_data(self, name: str, df: DataFrame,
                     options: dict[str, str] | None = None) -> str:
-        from pyspark.sql import functions as F
-
         d = os.path.join(self._tdir(name), "data", uuid.uuid4().hex)
         m = self._manifest(name)
         spec = m.get("bucket_by")
         if spec:
             col, nb = spec[0], int(spec[1])
             if "_bucket" not in df.columns:
-                df = df.withColumn("_bucket", F.pmod(F.col(col), F.lit(nb)).cast("int"))
+                df = df.withColumn("_bucket", bucket_of(col, nb))
             # cluster rows so each task writes whole buckets (~1 file per
             # bucket per commit — Iceberg's write.distribution-mode=hash)
             w = df.repartition(nb, "_bucket").write.mode("errorifexists").partitionBy("_bucket")
@@ -357,10 +358,7 @@ class ManifestCatalog:
         else:
             parts = [self.spark.read.schema(m["schema_ddl"]).parquet(d)
                      for d in merge]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        newdir = self._write_data(name, df)
+        newdir = self._write_data(name, reduce(DataFrame.unionByName, parts))
         return self._commit(name, self._next_manifest(m, keep + [newdir]))
 
     # ---- snapshots (resume) ----------------------------------------

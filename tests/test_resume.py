@@ -78,6 +78,64 @@ def test_crash_mid_crawl_resume_identical(spark, web_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_resume_with_other_table_bucket_count(spark, web_dir):
+    """The bucket-wise pending join takes B from the tables, not the
+    config: a crawl started at table_bucket_count=4, crashed after round
+    1's commits and resumed at table_bucket_count=2 (the tables keep B=4)
+    must still see every pending row and match an uninterrupted B=4
+    crawl. bloom_probe_min_rows=0 forces the bucket-wise plan."""
+    tmp = tempfile.mkdtemp()
+    try:
+        kw = dict(web_dir=web_dir, corpus_size=60, seen_parts=4, bloom_probe_min_rows=0)
+        res_a = crawl(spark, CrawlConfig(job_dir=f"{tmp}/job_a", table_bucket_count=4, **kw))
+
+        def killer(r, v, ex):
+            if r >= 1:
+                raise _Kill()
+            return False
+
+        with pytest.raises(_Kill):
+            crawl(spark, CrawlConfig(job_dir=f"{tmp}/job_b", table_bucket_count=4,
+                                     stop_check=killer, **kw))
+        assert CheckpointStore(f"{tmp}/job_b").latest()["round"] == 0
+        res_b = crawl(spark, CrawlConfig(job_dir=f"{tmp}/job_b", table_bucket_count=2, **kw),
+                      resume=True)
+        assert ManifestCatalog(spark, f"{tmp}/job_b").bucket_spec("frontier") == ("url_hash", 4)
+        assert (res_b.stop_reason, res_b.visited) == (res_a.stop_reason, res_a.visited)
+
+        key = ["fetch_round", "fetch_vt", "url_hash"]
+        ca, _, _ = _final_state(spark, f"{tmp}/job_a")
+        cb, _, _ = _final_state(spark, f"{tmp}/job_b")
+        assert ca[key].values.tolist() == cb[key].values.tolist()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_from_checkpoint_listing_seen(spark, web_dir, tmp_path):
+    """Crawls keep no ``seen`` table (the frontier is the exact seen set),
+    but checkpoints written while they did list it: such a job_dir must
+    still restore and finish."""
+    job = str(tmp_path / "job")
+    cfg = CrawlConfig(web_dir=web_dir, job_dir=job, corpus_size=30, seen_parts=4)
+
+    def killer(r, v, ex):
+        raise _Kill()
+
+    with pytest.raises(_Kill):
+        crawl(spark, CrawlConfig(web_dir=web_dir, job_dir=job, corpus_size=30,
+                                 seen_parts=4, stop_check=killer))
+    cat = ManifestCatalog(spark, job)
+    assert not cat.exists("seen")
+    # the table and checkpoint entry an older crawl left behind
+    cat.create("seen", "url_hash bigint, part_id int")
+    ck = CheckpointStore(job)
+    latest = ck.latest()
+    latest["versions"]["seen"] = cat.current_version("seen")
+    ck.save(latest.pop("round"), latest)
+    res = crawl(spark, cfg, resume=True)
+    assert res.stop_reason == "corpus_size" and res.visited >= 30
+
+
 def test_resume_after_stop_is_noop(spark, web_dir):
     tmp = tempfile.mkdtemp()
     try:
@@ -85,6 +143,8 @@ def test_resume_after_stop_is_noop(spark, web_dir):
                           corpus_size=30, seen_parts=4)
         res1 = crawl(spark, cfg)
         assert res1.stop_reason == "corpus_size"
+        # the frontier is the exact seen set: no separate seen table
+        assert not ManifestCatalog(spark, f"{tmp}/job").exists("seen")
         v1 = ManifestCatalog(spark, f"{tmp}/job").current_version("corpus")
         res2 = crawl(spark, cfg, resume=True)
         assert res2.visited == res1.visited

@@ -157,3 +157,18 @@ def test_bucketed_read_missing_commit_dir_raises(spark, cat):
     shutil.rmtree(cat._manifest("t")["dirs"][0])
     with pytest.raises(FileNotFoundError, match="missing"):
         cat.read("t")
+
+
+def test_read_bucket_missing_commit_dir_raises(spark, cat):
+    """read_bucket is as loud as read(): a lost commit dir raises even for
+    a bucket the remaining commits do not hold, while a commit with no
+    _bucket=b leaf (an empty bucket) reads as zero rows."""
+    import shutil
+
+    cat.create("t", "a long", bucket_by=("a", 4))
+    cat.append("t", spark.range(8).selectExpr("id as a"))
+    cat.append("t", spark.range(8, 9).selectExpr("id as a"))  # bucket 0 only
+    assert [cat.read_bucket("t", b).count() for b in range(4)] == [3, 2, 2, 2]
+    shutil.rmtree(cat._manifest("t")["dirs"][0])
+    with pytest.raises(FileNotFoundError, match="missing"):
+        cat.read_bucket("t", 1)
