@@ -9,8 +9,13 @@ hold every checkpoint in executor storage until driver GC reaches it.
 
 from __future__ import annotations
 
+import logging
+
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+
+log = logging.getLogger("pegasus_spark")
+_fallback_logged = False
 
 
 def free_checkpoint(df: DataFrame) -> None:
@@ -19,8 +24,13 @@ def free_checkpoint(df: DataFrame) -> None:
     whose ``rdd`` field is exactly the persisted RDD; unpersist it
     non-blocking. Failure is harmless — Spark's ContextCleaner
     unpersists the RDD anyway once the driver-side reference is
-    garbage-collected."""
+    garbage-collected — but it is logged once, so a Spark version whose
+    analyzed plan is not a bare LogicalRDD shows up."""
+    global _fallback_logged
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Py4JError:
-        pass
+    except Py4JError as e:
+        if not _fallback_logged:
+            _fallback_logged = True
+            log.debug("free_checkpoint: cannot reach the checkpoint RDD (%s); "
+                      "leaving its blocks to Spark's ContextCleaner", type(e).__name__)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import logging
 import time
+from typing import Iterator
 
 import pandas as pd
 import pyarrow as pa
@@ -76,10 +77,27 @@ def _metrics_table(rows: list[tuple]) -> pa.Table:
 
 from pyspark.sql.types import StringType
 
+# rows per resolve_canonicalize call: each call pays ~10 ms of fixed
+# pandas/regex overhead, so the UDF merges a partition's Arrow batches
+# (spark.sql.execution.arrow.maxRecordsPerBatch, as small as 64 rows on
+# blob-heavy sessions) until a chunk reaches this size
+CANON_CHUNK_ROWS = 4096
+
 
 @F.pandas_udf(StringType())
-def _canon_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    return resolve_canonicalize(base, href)
+def _canon_udf(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+    bases, hrefs, n = [], [], 0
+    for base, href in batches:
+        bases.append(base)
+        hrefs.append(href)
+        n += len(base)
+        if n >= CANON_CHUNK_ROWS:
+            yield resolve_canonicalize(pd.concat(bases, ignore_index=True),
+                                       pd.concat(hrefs, ignore_index=True))
+            bases, hrefs, n = [], [], 0
+    if bases:
+        yield resolve_canonicalize(pd.concat(bases, ignore_index=True),
+                                   pd.concat(hrefs, ignore_index=True))
 
 
 # canon is pure, but asNondeterministic() stops Catalyst from (a) pushing
@@ -186,19 +204,21 @@ def enqueue_new(ctx: RoundContext, cand: DataFrame, discovered_round: int) -> tu
         "src_url_hash",
     )
     # below the probe threshold the bloom has no reader: defer the merge
-    # (the frontier append IS the exact-set update; filter_new's probe
-    # path rebuilds the bloom once at the threshold crossing) — the
-    # per-round merge job was ~12% of the headline crawl's wall
+    # (the frontier append IS the exact-set update) — the per-round
+    # merge job was ~12% of the headline crawl's wall. The round that
+    # crosses the threshold keeps to the exact anti-join (filter_new
+    # skips a bloom known behind), and its seen.add rebuilds the bloom
+    # from frontier ∪ new, concurrently with the frontier append
     defer_bloom = ctx.approx_frontier_rows < ctx.cfg.bloom_probe_min_rows
     if defer_bloom and ctx.seen.exact_source is not None:
-        # the frontier is the exact set, so a deferred seen.add has
-        # nothing to do; the frontier count never falls, so no earlier
-        # probe can have marked the bloom in sync
+        # the frontier is the exact set: the deferred seen.add submits
+        # no job, it only records that the bloom is now behind
         ctx.cat.append("frontier", rows)
+        ctx.seen.add(new.select("url_hash"), defer_bloom=True)
     else:
-        # frontier append and bloom merge are independent consumers of
-        # the persisted `new` (different tables, txn-staged commits): run
-        # them as concurrent jobs
+        # frontier append and bloom merge (or rebuild) are independent
+        # consumers of the persisted `new` (different tables, txn-staged
+        # commits): run them as concurrent jobs
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -236,18 +256,21 @@ def inject_seeds(ctx: RoundContext, seeds: DataFrame) -> tuple[int, int, int]:
     return enqueue_new(ctx, cand, discovered_round=0)
 
 
+log = logging.getLogger("pegasus_spark")
+
+
 def _obs_get(obs: Observation, fallback):
-    """Observation.get, tolerant of AQE empty-relation propagation: when a
-    round's plan collapses to an empty LocalRelation, the CollectMetrics
-    node is optimized away and `get` raises — fall back to a (trivially
-    cheap, because empty) aggregate job."""
+    """Observation.get, tolerant of empty-relation propagation: when a
+    plan collapses to an empty LocalRelation (statically empty table
+    reads, or AQE at run time), the CollectMetrics node can be optimized
+    away and `get` raises — fall back to a (trivially cheap, because
+    empty) aggregate job, and say so on the ``pegasus_spark`` logger."""
     try:
         return obs.get
-    except Exception:
+    except Exception as e:
+        log.debug("observation unavailable (%s); running its aggregate job instead",
+                  type(e).__name__)
         return fallback()
-
-
-log = logging.getLogger("pegasus_spark")
 
 
 class _StepTimer:

@@ -91,9 +91,10 @@ class SeenSet:
         IDENTICAL, only the physical plan changes. 0 (default) never
         skips. Callers that skip probes may also pass
         ``defer_bloom=True`` to ``add`` — the merge job is then skipped
-        too, and the first probing ``filter_new`` detects the gap
-        (bloom item count < exact row count) and rebuilds every
-        partition from the exact set in one executor-side pass."""
+        too and the bloom is known to be behind: ``filter_new`` keeps to
+        the exact anti-join, and the next merging ``add`` (the
+        gate-crossing round's) rebuilds every partition from the exact
+        set plus its new hashes in one executor-side pass."""
         self.cat = catalog
         self.n_parts = n_parts
         self.m_bits = m_bits
@@ -101,8 +102,10 @@ class SeenSet:
         self.overflow_rebuild = overflow_rebuild
         self.exact_source = exact_source
         self.probe_min_rows = probe_min_rows
-        # None = unknown (fresh instance — a prior deferring run may have
-        # left the table behind); True = verified/maintained in sync
+        # None = unknown (fresh or resumed instance — a prior deferring
+        # run may have left the table behind); True = verified/maintained
+        # in sync; False = known behind (a deferred add since the last
+        # sync)
         self._bloom_synced: bool | None = None
         if exact_source is None:
             catalog.create("seen", SEEN_DDL)
@@ -178,8 +181,12 @@ class SeenSet:
 
         ``approx_seen_rows`` (a floor-safe estimate of the exact set's
         size) enables the size-adaptive probe gate — see ``__init__``
-        on ``probe_min_rows``. Result rows are identical either way."""
-        if (approx_seen_rows is not None
+        on ``probe_min_rows``. A bloom known to be behind (deferred adds)
+        is not probed either: the next merging ``add`` rebuilds it, so a
+        probe here would pay that rebuild serially, ahead of the rows.
+        Result rows are identical either way."""
+        if self._bloom_synced is False or (
+                approx_seen_rows is not None
                 and approx_seen_rows < self.probe_min_rows):
             probed = df.withColumn("maybe_seen", F.lit(True))
         else:
@@ -198,28 +205,34 @@ class SeenSet:
         scalar (max overflow bytes, via ``observe`` riding the write) to
         decide whether any partition needs a rebuild.
 
-        ``defer_bloom=True`` skips the merge job (the EXACT set is still
-        updated — with ``exact_source`` set this call is then a no-op,
-        since that source table is maintained by the caller). Sound only
-        for callers that probe exclusively through ``filter_new``: its
-        probe path rebuilds a behind bloom from the exact set before the
-        first probe (see ``_ensure_bloom_covers``). Measured rationale:
-        while the seen set is below ``probe_min_rows`` the bloom is
-        never probed, and the per-round merge job was ~12% of the
-        headline crawl's wall — maintenance for a reader that does not
-        exist yet; deferring converts it into one rebuild at the
+        ``defer_bloom=True`` skips the merge job and marks the bloom
+        behind (the EXACT set is still updated — with ``exact_source``
+        set this call then submits no job, since that source table is
+        maintained by the caller). The next merging ``add`` on a bloom
+        known behind — the round that crosses ``probe_min_rows`` —
+        rebuilds every partition from exact ∪ new instead of merging,
+        concurrently with the caller's own append of ``new`` to the
+        exact source (hashes are deduplicated per partition, so a
+        source that already holds them is not double-counted). Measured
+        rationale: while the seen set is below ``probe_min_rows`` the
+        bloom is never probed, and the per-round merge job was ~12% of
+        the headline crawl's wall — maintenance for a reader that does
+        not exist yet; deferring converts it into one rebuild at the
         threshold crossing, amortized over the crawl's lifetime."""
+        hdf = self.with_part_id(new_hashes.select(F.col(col).alias("url_hash")))
         if defer_bloom:
             self._bloom_synced = False
             if self.exact_source is None:
-                self.cat.append(
-                    "seen",
-                    self.with_part_id(new_hashes.select(F.col(col).alias("url_hash"))),
-                )
+                self.cat.append("seen", hdf)
             return
-        hdf = self.with_part_id(new_hashes.select(F.col(col).alias("url_hash"))).persist()
+        hdf = hdf.persist()
         if self.exact_source is None:
             self.cat.append("seen", hdf)  # else: the source table IS the exact set
+        if self._bloom_synced is False:
+            self._rebuild_full(extra=hdf)
+            self._bloom_synced = True
+            hdf.unpersist()
+            return
 
         bloom_df = self.cat.read("bloom")
         m_default, k = self.m_bits, self.k
@@ -268,6 +281,8 @@ class SeenSet:
     def _ensure_bloom_covers(self) -> None:
         """Verify the bloom covers the exact set (deferred merges leave
         it behind); rebuild every partition from the exact set if not.
+        A fresh or resumed instance over an in-sync bloom therefore pays
+        two small jobs before its first probe, not a rebuild.
 
         Check: Σ n_items over bloom rows vs count(exact). Deferral in
         the filter_new/add protocol skips exactly the rows it appends,
@@ -275,8 +290,7 @@ class SeenSet:
         duplicate standalone add can only INFLATE n_items, and a
         duplicate's bits are already set — the criterion never
         under-triggers). Both sides are O(P)-scalar / one count job,
-        paid only while ``_bloom_synced`` is unknown or False — i.e.
-        once per instance plus once per threshold crossing."""
+        paid only while ``_bloom_synced`` is unknown or False."""
         if self._bloom_synced:
             return
         exact_n = self._exact().count()
@@ -287,10 +301,12 @@ class SeenSet:
             self._rebuild_full()
         self._bloom_synced = True
 
-    def _rebuild_full(self) -> None:
-        """Rebuild EVERY bloom partition from the exact set in one
-        executor-side grouped-map pass; each partition sizes itself so
-        its capacity covers its row count (same 2× geometric growth as
+    def _rebuild_full(self, extra: DataFrame | None = None) -> None:
+        """Rebuild EVERY bloom partition from the exact set (plus the
+        ``url_hash``/``part_id`` rows of ``extra``) in one executor-side
+        grouped-map pass; each partition deduplicates its hashes — a
+        hash in both inputs counts once — and sizes itself so its
+        capacity covers its distinct count (same 2× geometric growth as
         the overflow rebuild — n is known inside the task, so no driver
         statistics are needed). Empty partitions simply have no row,
         which the probe already treats as all-new."""
@@ -298,11 +314,11 @@ class SeenSet:
 
         def rebuild(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pid = int(key[0])
-            n = len(pdf)
+            hv = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
+            n = len(hv)
             m_bits = m_default
             while int(m_bits * 0.693 / k) < n:
                 m_bits *= 2
-            hv = pdf["url_hash"].to_numpy(dtype=np.int64)
             bits = np.zeros(m_bits // 8, dtype=np.uint8)
             _set_bits(bits, hv, m_bits, k)
             return pd.DataFrame({
@@ -310,11 +326,10 @@ class SeenSet:
                 "n_items": [n], "overflow": [b""],
             })
 
-        rebuilt = (
-            self.with_part_id(self._exact())
-            .groupBy("part_id")
-            .applyInPandas(rebuild, schema=BLOOM_DDL)
-        )
+        src = self.with_part_id(self._exact())
+        if extra is not None:
+            src = src.unionByName(extra.select("url_hash", "part_id"))
+        rebuilt = src.groupBy("part_id").applyInPandas(rebuild, schema=BLOOM_DDL)
         self.cat.overwrite("bloom", rebuilt)
 
     def _rebuild_overflowed(self) -> None:

@@ -21,14 +21,15 @@ from pegasus_spark.config import CrawlConfig
 from pegasus_spark.crawl import crawl
 from pegasus_spark.fixtures import WebParams, generate_web, write_web
 
-# Measured on the round-5 engine: a 9-round exhaustion crawl (seed=7/
-# 120-page fixture, round_width_vt=24000) submits 289 Spark jobs end to
-# end (~32/round: AQE materializes each shuffle stage as its own
+# Measured on 4 cores: the 8-round exhaustion crawl of the seed=7/
+# 120-page fixture (round_width_vt=24000) submits 145 Spark jobs end to
+# end (~18/round: AQE materializes each shuffle stage as its own
 # sub-job, so one logical action fans into several job ids; setup
-# probes + final stop check included). The ~10% slack absorbs AQE plan
-# wobble; a real structural regression (one extra count()/collect() per
-# round) adds >=10 logical actions ≈ 20-30 AQE jobs and trips the bound.
-MAX_JOBS_TOTAL = 320
+# probes + final stop check included). Empty table reads submit none
+# (tables.ManifestCatalog._scan); with them it was 150. The ~10% slack
+# absorbs AQE plan wobble; one extra count()/collect() per round adds
+# at least 8 jobs and, with its AQE sub-jobs, trips the bound.
+MAX_JOBS_TOTAL = 160
 
 
 def _max_job_id(spark) -> int:
@@ -39,9 +40,10 @@ def _max_job_id(spark) -> int:
 
 # Same fixture crawled in the full PRODUCTION layout (bucketed
 # frontier/corpus + compaction firing mid-crawl): each compaction pass
-# adds a handful of rewrite jobs. Measured round 5 at
-# round_width_vt=24000 (9 rounds): 342.
-MAX_JOBS_TOTAL_BUCKETED = 380
+# adds a handful of rewrite jobs. Measured on 4 cores at
+# round_width_vt=24000 (8 rounds): 164 (169 before empty reads stopped
+# submitting jobs), plus the same ~10% slack.
+MAX_JOBS_TOTAL_BUCKETED = 181
 PRODUCTION_LAYOUT = dict(table_bucket_count=4, compact_every=4, compact_target_dirs=4)
 
 

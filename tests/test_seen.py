@@ -119,32 +119,81 @@ def test_incremental_adds_match_bulk(spark, cat, tmp_path):
     assert got1 == got2 == set(range(300, 400))
 
 
+def _n_items(cat):
+    return sum(r["n_items"] for r in cat.read("bloom").select("n_items").collect())
+
+
 def test_deferred_bloom_skip_and_rebuild_at_crossing(spark, cat):
-    """r6 size-adaptive gate: adds below the probe threshold defer the
-    bloom merge; the first probing filter_new detects the gap
-    (Σ n_items < exact count) and rebuilds every partition from the
-    exact set — results identical in both modes, bloom sound after."""
+    """Size-adaptive gate: adds below the probe threshold defer the bloom
+    merge and mark the bloom behind. At and above the threshold,
+    filter_new keeps to the exact anti-join while the bloom is known
+    behind (no probe, no bloom write ahead of the rows); the crossing
+    round's merging add rebuilds every partition from exact ∪ new, after
+    which the bloom is in sync, sound, and merged incrementally."""
     s = SeenSet(cat, n_parts=2, probe_min_rows=100)
     s.add(_hashes_df(spark, range(50)), defer_bloom=True)
-    # skip mode (approx below threshold): plain exact anti-join
-    out = {r["url_hash"]
-           for r in s.filter_new(_hashes_df(spark, range(40, 60)),
-                                 approx_seen_rows=50).collect()}
-    assert out == set(range(50, 60))
-    # the deferred merge left the bloom EMPTY while the exact set has 50
-    # rows — a raw probe now would yield false negatives; the probing
-    # filter_new path must rebuild first and still be exact
-    out = {r["url_hash"]
-           for r in s.filter_new(_hashes_df(spark, range(40, 60)),
-                                 approx_seen_rows=200).collect()}
-    assert out == set(range(50, 60))
-    # bloom soundness restored: every added value probes maybe_seen=True
-    probed = s.split_maybe_seen(_hashes_df(spark, range(50)))
+    v0 = cat.current_version("bloom")
+    for approx in (50, 200):  # below, then past the threshold
+        q = s.filter_new(_hashes_df(spark, range(40, 60)), approx_seen_rows=approx)
+        assert "FlatMapCoGroupsInPandas" not in q._jdf.queryExecution().optimizedPlan().toString()
+        assert {r["url_hash"] for r in q.collect()} == set(range(50, 60))
+    assert cat.current_version("bloom") == v0
+    # the crossing add: the exact table already holds the new hashes
+    # (standalone add appends them first), and they count once
+    s.add(_hashes_df(spark, range(50, 60)))
+    assert _n_items(cat) == 60
+    v1 = cat.current_version("bloom")
+    probed = s.split_maybe_seen(_hashes_df(spark, range(60)))
     assert probed.filter("NOT maybe_seen").count() == 0
-    # and subsequent merged adds keep it in sync (no rebuild needed)
+    assert cat.current_version("bloom") == v1  # in sync: no rebuild before probing
+    # probing again past the threshold, and subsequent merged adds keep it in sync
+    out = {r["url_hash"]
+           for r in s.filter_new(_hashes_df(spark, range(55, 65)),
+                                 approx_seen_rows=200).collect()}
+    assert out == set(range(60, 65))
     s.add(_hashes_df(spark, range(100, 120)))
+    assert _n_items(cat) == 80
     probed = s.split_maybe_seen(_hashes_df(spark, range(100, 120)))
     assert probed.filter("NOT maybe_seen").count() == 0
+
+
+def test_crossing_add_counts_a_racing_source_append_once(spark, cat):
+    """With an exact source (the crawl's frontier), the crossing round's
+    add runs concurrently with the caller's append of the same new
+    hashes to that source; if the append lands first, the rebuild sees
+    them in both inputs and must still count each hash once."""
+    cat.create("src", "url_hash long")
+    s = SeenSet(cat, n_parts=4, probe_min_rows=10,
+                exact_source=lambda: cat.read("src"))
+    cat.append("src", _hashes_df(spark, range(100)))
+    s.add(_hashes_df(spark, range(100)), defer_bloom=True)
+    assert cat.is_empty("bloom")  # a deferred add with a source writes nothing
+    cat.append("src", _hashes_df(spark, range(100, 150)))  # the racing append
+    s.add(_hashes_df(spark, range(100, 150)))
+    assert _n_items(cat) == 150
+    probed = s.split_maybe_seen(_hashes_df(spark, range(150)))
+    assert probed.filter("NOT maybe_seen").count() == 0
+
+
+def test_fresh_instance_verifies_in_sync_bloom_without_rebuild(spark, cat):
+    """A fresh (resumed) instance does not know the bloom's state: its
+    first probe verifies Σ n_items against the exact set and rebuilds
+    only a bloom that is behind."""
+    SeenSet(cat, n_parts=2).add(_hashes_df(spark, range(100)))
+    v0 = cat.current_version("bloom")
+    s = SeenSet(cat, n_parts=2, probe_min_rows=10)
+    out = {r["url_hash"]
+           for r in s.filter_new(_hashes_df(spark, range(90, 110)),
+                                 approx_seen_rows=100).collect()}
+    assert out == set(range(100, 110))
+    assert cat.current_version("bloom") == v0
+    # behind: a deferred add by another instance, then a fresh one probes
+    SeenSet(cat, n_parts=2).add(_hashes_df(spark, range(200, 250)), defer_bloom=True)
+    s = SeenSet(cat, n_parts=2, probe_min_rows=10)
+    probed = s.split_maybe_seen(_hashes_df(spark, range(200, 250)))
+    assert probed.filter("NOT maybe_seen").count() == 0
+    assert cat.current_version("bloom") == v0 + 1
+    assert _n_items(cat) == 150
 
 
 def test_split_maybe_seen_sound_after_deferred_add(spark, cat):

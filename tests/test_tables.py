@@ -18,6 +18,34 @@ def test_empty_table_has_schema(spark, cat):
     assert [f.name for f in df.schema.fields] == ["a", "b"]
 
 
+def _max_job_id(spark) -> int:
+    seq = spark._jsparkSession.sparkContext().statusStore().jobsList(None)
+    return max((seq.apply(i).jobId() for i in range(seq.size())), default=-1)
+
+
+def test_empty_reads_run_no_job(spark, cat):
+    """A never-written table, and a bucket slice with no rows, read as a
+    relation the optimizer knows is empty: collecting it submits no Spark
+    job, its plan holds no (Python) RDD scan, and a join against it is
+    pruned at plan time."""
+    cat.create("t", "a long, b string")
+    cat.create("u", "url_hash long", bucket_by=("url_hash", 4))
+    cat.create("w", "url_hash long", bucket_by=("url_hash", 4))
+    cat.append("w", spark.range(20).selectExpr("id * 4 as url_hash"))  # all in bucket 0
+    assert cat.read_bucket("w", 0).count() == 20
+    reads = [cat.read("t"), cat.read("u"), cat.read_bucket("u", 2), cat.read_bucket("w", 3)]
+    for df in reads:
+        before = _max_job_id(spark)
+        assert df.collect() == []
+        assert _max_job_id(spark) == before
+        assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+    big = spark.range(10).selectExpr("id as url_hash")
+    for how in ("inner", "left_anti"):
+        plan = big.join(cat.read_bucket("w", 3), "url_hash", how) \
+            ._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan
+
+
 def test_append_versions_and_time_travel(spark, cat):
     cat.create("t", "a long")
     v1 = cat.append("t", spark.range(3).selectExpr("id as a"))
