@@ -103,7 +103,7 @@ def _make_ctx(spark: SparkSession, cfg: CrawlConfig) -> tuple[RoundContext, Chec
         k=cfg.bloom_k,
         overflow_rebuild=cfg.bloom_overflow_rebuild,
         # the frontier is append-only and dedup-gated, so its url_hash
-        # column IS the URL-seen set — no separate seen table to write
+        # column IS the URL-seen set
         exact_source=lambda: cat.read("frontier"),
         probe_min_rows=cfg.bloom_probe_min_rows,
     )

@@ -1,5 +1,6 @@
-"""Release of ``localCheckpoint`` blocks, shared by the crawl round and the
-iterative graph operators.
+"""Lineage helpers shared by the crawl round, the seen set and the
+iterative graph operators: release of ``localCheckpoint`` blocks, and
+``Observation`` reads that fall back to an aggregate job.
 
 ``DataFrame.unpersist()`` is a no-op on a checkpointed DataFrame: its
 blocks belong to the RDD under the LogicalRDD root, not to a cached
@@ -12,10 +13,24 @@ from __future__ import annotations
 import logging
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 log = logging.getLogger("pegasus_spark")
 _fallback_logged = False
+
+
+def _obs_get(obs: Observation, fallback):
+    """Observation.get, tolerant of empty-relation propagation: when a
+    plan collapses to an empty LocalRelation (statically empty table
+    reads, or AQE at run time), the CollectMetrics node can be optimized
+    away and `get` raises — fall back to a (trivially cheap, because
+    empty) aggregate job, and say so on the ``pegasus_spark`` logger."""
+    try:
+        return obs.get
+    except Exception as e:
+        log.debug("observation unavailable (%s); running its aggregate job instead",
+                  type(e).__name__)
+        return fallback()
 
 
 def free_checkpoint(df: DataFrame) -> None:

@@ -32,7 +32,7 @@ from . import politeness
 from .canon import resolve_canonicalize
 from .config import CrawlConfig
 from .fetch import fetch_and_validate, store_bucket_count
-from .lineage import free_checkpoint
+from .lineage import _obs_get, free_checkpoint
 from .seen import SeenSet
 from .tables import ManifestCatalog, bucket_of, bucketwise_join
 
@@ -170,7 +170,7 @@ class RoundContext:
 
 
 def enqueue_new(ctx: RoundContext, cand: DataFrame, discovered_round: int) -> tuple[int, int, int]:
-    """Robots-gate, seen-gate, append to frontier+seen.
+    """Robots-gate, seen-gate, append to the frontier and the bloom.
     Returns (n_enqueued, dropped_robots, dropped_seen)."""
     et = _StepTimer(f"enq{discovered_round}")
     if ctx.robots is not None:
@@ -203,30 +203,20 @@ def enqueue_new(ctx: RoundContext, cand: DataFrame, discovered_round: int) -> tu
         F.lit(discovered_round).cast("int").alias("discovered_round"),
         "src_url_hash",
     )
-    # below the probe threshold the bloom has no reader: defer the merge
-    # (the frontier append IS the exact-set update) — the per-round
-    # merge job was ~12% of the headline crawl's wall. The round that
-    # crosses the threshold keeps to the exact anti-join (filter_new
-    # skips a bloom known behind), and its seen.add rebuilds the bloom
-    # from frontier ∪ new, concurrently with the frontier append
-    defer_bloom = ctx.approx_frontier_rows < ctx.cfg.bloom_probe_min_rows
-    if defer_bloom and ctx.seen.exact_source is not None:
-        # the frontier is the exact set: the deferred seen.add submits
-        # no job, it only records that the bloom is now behind
-        ctx.cat.append("frontier", rows)
-        ctx.seen.add(new.select("url_hash"), defer_bloom=True)
-    else:
-        # frontier append and bloom merge (or rebuild) are independent
-        # consumers of the persisted `new` (different tables, txn-staged
-        # commits): run them as concurrent jobs
-        from concurrent.futures import ThreadPoolExecutor
+    # frontier append and bloom merge (or rebuild) are independent
+    # consumers of the persisted `new` (different tables, txn-staged
+    # commits): run them as concurrent jobs. The frontier append IS the
+    # exact-set update; below the probe gate seen.add defers the merge
+    # and submits no job, and the crossing round's seen.add rebuilds the
+    # bloom from frontier ∪ new (SeenSet.add)
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_app = pool.submit(ctx.cat.append, "frontier", rows)
-            f_seen = pool.submit(ctx.seen.add, new.select("url_hash"),
-                                 defer_bloom=defer_bloom)
-            f_app.result()
-            f_seen.result()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_app = pool.submit(ctx.cat.append, "frontier", rows)
+        f_seen = pool.submit(ctx.seen.add, new.select("url_hash"),
+                             approx_seen_rows=ctx.approx_frontier_rows)
+        f_app.result()
+        f_seen.result()
     et.lap("frontier_append|seen_add")
     cf = _obs_get(obs_f, lambda: ctx.gate(cand).agg(
         F.count(F.lit(1)).alias("n"),
@@ -257,20 +247,6 @@ def inject_seeds(ctx: RoundContext, seeds: DataFrame) -> tuple[int, int, int]:
 
 
 log = logging.getLogger("pegasus_spark")
-
-
-def _obs_get(obs: Observation, fallback):
-    """Observation.get, tolerant of empty-relation propagation: when a
-    plan collapses to an empty LocalRelation (statically empty table
-    reads, or AQE at run time), the CollectMetrics node can be optimized
-    away and `get` raises — fall back to a (trivially cheap, because
-    empty) aggregate job, and say so on the ``pegasus_spark`` logger."""
-    try:
-        return obs.get
-    except Exception as e:
-        log.debug("observation unavailable (%s); running its aggregate job instead",
-                  type(e).__name__)
-        return fallback()
 
 
 class _StepTimer:

@@ -1,19 +1,21 @@
-"""URL-seen set: partitioned Bloom filter + exact table + overflow.
+"""URL-seen set: partitioned Bloom filter + overflow over an exact set.
 
 Replaces shriphani/pegasus's LMDB visited-cache (``src/pegasus/cache.clj``
 ``initialize-caches`` — symbol cite per SURVEY.md §0) per the north rule's
 "partitioned Bloom-filter-with-cuckoo-overflow URL-seen set"
 (BASELINE.json). Design (SURVEY.md §2 O4):
 
-- ``seen`` table: exact ever-enqueued ``url_hash`` rows, partitioned by
-  ``part_id = pmod(url_hash, P)`` — **the source of truth**. The north
-  rule requires *matching* the reference's URL-seen set, so the bloom is
-  an I/O saver, never authoritative.
-- ``bloom`` table: one row per partition, numpy bit array (binary) +
-  an exact int64 *overflow* array holding hashes inserted after the
-  partition reached its fpp capacity (the cuckoo-overflow role). When
-  the overflow grows past a threshold, the partition's bloom is rebuilt
-  at 2× m from the exact ``seen`` partition (executor-side).
+- exact set: the ``url_hash`` column of the caller's ``exact_source``
+  (the crawl passes its frontier table, which is append-only and
+  dedup-gated) — **the source of truth**; there is no separate ``seen``
+  table. The north rule requires *matching* the reference's URL-seen
+  set, so the bloom is an I/O saver, never authoritative.
+- ``bloom`` table: one row per partition ``part_id = pmod(url_hash, P)``,
+  numpy bit array (binary) + an exact int64 *overflow* array holding
+  hashes inserted after the partition reached its fpp capacity (the
+  cuckoo-overflow role). When the overflow grows past a threshold, the
+  partition's bloom is rebuilt at 2× m from its exact-set rows
+  (executor-side).
 - ``probe``: candidates are co-grouped with their own bloom row by
   ``part_id`` (grouped-map ``applyInPandas`` over a cogroup) — rows the
   bloom rejects are *definitely new* and skip the exact anti-join
@@ -36,9 +38,9 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from .hashing import bloom_indexes
-from .tables import ManifestCatalog
+from .lineage import _obs_get
+from .tables import ManifestCatalog, bucket_of
 
-SEEN_DDL = "url_hash long, part_id int"
 BLOOM_DDL = "part_id int, m_bits long, bloom binary, n_items long, overflow binary"
 
 
@@ -67,17 +69,16 @@ class SeenSet:
         m_bits: int = 1 << 20,
         k: int = 5,
         overflow_rebuild: int = 4096,
-        exact_source=None,
+        *,
+        exact_source,
         probe_min_rows: int = 0,
     ):
-        """``exact_source``: optional zero-arg callable returning the
-        exact ever-enqueued DataFrame (must carry ``url_hash``). When
-        set, the exact seen set is a PROJECTION of that source (the
-        crawl passes the frontier table — its url_hash column IS the
-        seen set, so no separate ``seen`` table is created or appended: one
-        fewer Spark job per round, and at the 10^10 design point one
-        fewer 80 GB duplicate table). The bloom table is maintained
-        either way; standalone uses (no source) keep the exact table.
+        """``exact_source``: zero-arg callable returning the exact
+        ever-enqueued DataFrame (must carry ``url_hash``, each hash once).
+        The exact set is a PROJECTION of that source: the crawl passes the
+        frontier table, so at the 10^10 design point there is no 80 GB
+        duplicate of its key column. The caller appends to the source;
+        ``add`` maintains only the bloom table.
 
         ``probe_min_rows``: size-adaptive probe gate. The bloom probe
         exists to spare candidates the exact anti-join's build side when
@@ -85,16 +86,15 @@ class SeenSet:
         small (≤ this many rows ≈ ≤ tens of MB of int64 keys) the
         anti-join alone is both exact and cheaper than the probe's extra
         shuffle + two Arrow/Python stages per round. Callers that track
-        an (approximate, floor-safe) seen-set size pass it to
-        ``filter_new``; below the threshold the probe is skipped —
-        maybe_seen=True for every row, the anti-join result is
-        IDENTICAL, only the physical plan changes. 0 (default) never
-        skips. Callers that skip probes may also pass
-        ``defer_bloom=True`` to ``add`` — the merge job is then skipped
-        too and the bloom is known to be behind: ``filter_new`` keeps to
-        the exact anti-join, and the next merging ``add`` (the
-        gate-crossing round's) rebuilds every partition from the exact
-        set plus its new hashes in one executor-side pass."""
+        an (approximate, floor-safe) seen-set size pass it as
+        ``approx_seen_rows`` to ``filter_new`` and ``add``; below the
+        threshold ``filter_new`` skips the probe — maybe_seen=True for
+        every row, the anti-join result is IDENTICAL, only the physical
+        plan changes — and ``add`` defers the bloom merge (no job) and
+        marks the bloom behind: ``filter_new`` keeps to the exact
+        anti-join, and the next merging ``add`` (the gate-crossing
+        round's) rebuilds every partition from the exact set plus its
+        new hashes in one executor-side pass. 0 (default) never skips."""
         self.cat = catalog
         self.n_parts = n_parts
         self.m_bits = m_bits
@@ -107,26 +107,21 @@ class SeenSet:
         # in sync; False = known behind (a deferred add since the last
         # sync)
         self._bloom_synced: bool | None = None
-        if exact_source is None:
-            catalog.create("seen", SEEN_DDL)
         catalog.create("bloom", BLOOM_DDL)
 
     def _exact(self) -> DataFrame:
-        if self.exact_source is not None:
-            return self.exact_source().select("url_hash")
-        return self.cat.read("seen").select("url_hash")
+        return self.exact_source().select("url_hash")
 
-    def _capacity(self, m_bits: int) -> int:
-        # items at which the partition hits its design fpp: n ≈ m·ln2/k
-        return int(m_bits * 0.693 / self.k)
+    def _below_gate(self, approx_seen_rows: int | None) -> bool:
+        return approx_seen_rows is not None and approx_seen_rows < self.probe_min_rows
 
-    def with_part_id(self, df: DataFrame, col: str = "url_hash") -> DataFrame:
-        return df.withColumn("part_id", F.pmod(F.col(col), F.lit(self.n_parts)).cast("int"))
+    def with_part_id(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("part_id", bucket_of("url_hash", self.n_parts))
 
     # ---- probe ------------------------------------------------------
-    def split_maybe_seen(self, df: DataFrame, col: str = "url_hash") -> DataFrame:
+    def split_maybe_seen(self, df: DataFrame) -> DataFrame:
         """Adds ``maybe_seen:boolean``. False ⇒ definitely not in the set
-        (bloom guarantee); True ⇒ must be checked against ``seen``.
+        (bloom guarantee); True ⇒ must be checked against the exact set.
 
         Executor-side: candidates are shuffled to their ``part_id`` and
         co-grouped with that partition's single bloom row, so each task
@@ -137,8 +132,7 @@ class SeenSet:
         self._ensure_bloom_covers()
         if self.cat.is_empty("bloom"):
             return df.withColumn("maybe_seen", F.lit(False))
-        added_part = "part_id" not in df.columns
-        cand = self.with_part_id(df, col) if added_part else df
+        cand = self.with_part_id(df)
         bloom_df = self.cat.read("bloom")
         out_schema = StructType(
             cand.schema.fields + [StructField("maybe_seen", BooleanType())]
@@ -152,7 +146,7 @@ class SeenSet:
                 res["maybe_seen"] = False
                 return res[out_cols]
             m_bits, bits, ovf, _n = _bloom_state(bdf, m_default)
-            hv = cdf[col].to_numpy(dtype=np.int64)
+            hv = cdf["url_hash"].to_numpy(dtype=np.int64)
             idx = bloom_indexes(hv, m_bits, k)
             hit = ((bits[idx >> 3] >> (idx & 7)) & 1).all(axis=1)
             if len(ovf):
@@ -160,17 +154,17 @@ class SeenSet:
             res["maybe_seen"] = hit
             return res[out_cols]
 
-        probed = (
+        return (
             cand.groupBy("part_id")
             .cogroup(bloom_df.groupBy("part_id"))
             .applyInPandas(probe, schema=out_schema)
+            .drop("part_id")
         )
-        return probed.drop("part_id") if added_part else probed
 
-    def filter_new(self, df: DataFrame, col: str = "url_hash",
-                   approx_seen_rows: int | None = None) -> DataFrame:
-        """Exact 'not in seen set' filter: bloom prefilter + ONE anti-join
-        whose condition is gated on the bloom verdict (SURVEY.md §2 O4).
+    def filter_new(self, df: DataFrame, approx_seen_rows: int | None = None) -> DataFrame:
+        """Exact 'not in seen set' filter on ``url_hash``: bloom prefilter
+        + ONE anti-join whose condition is gated on the bloom verdict
+        (SURVEY.md §2 O4).
 
         Single-branch on purpose: ``maybe_seen AND hash match`` as the
         anti-join condition gives the same result as splitting into
@@ -185,53 +179,45 @@ class SeenSet:
         is not probed either: the next merging ``add`` rebuilds it, so a
         probe here would pay that rebuild serially, ahead of the rows.
         Result rows are identical either way."""
-        if self._bloom_synced is False or (
-                approx_seen_rows is not None
-                and approx_seen_rows < self.probe_min_rows):
+        if self._bloom_synced is False or self._below_gate(approx_seen_rows):
             probed = df.withColumn("maybe_seen", F.lit(True))
         else:
-            probed = self.split_maybe_seen(df, col)
+            probed = self.split_maybe_seen(df)
         seen = self._exact().select(F.col("url_hash").alias("_seen_hash"))
-        cond = F.col("maybe_seen") & (F.col(col) == F.col("_seen_hash"))
+        cond = F.col("maybe_seen") & (F.col("url_hash") == F.col("_seen_hash"))
         return probed.join(seen, on=cond, how="left_anti").drop("maybe_seen")
 
     # ---- update -----------------------------------------------------
-    def add(self, new_hashes: DataFrame, col: str = "url_hash",
-            defer_bloom: bool = False) -> None:
-        """Insert distinct, not-yet-present hashes: append to the exact
-        table; OR-merge the blooms per partition executor-side (cogroup
-        of new hashes × bloom rows on ``part_id``) and write the merged
-        bloom table back from the executors. The driver learns only ONE
-        scalar (max overflow bytes, via ``observe`` riding the write) to
-        decide whether any partition needs a rebuild.
+    def add(self, new_hashes: DataFrame, approx_seen_rows: int | None = None) -> None:
+        """Insert distinct, not-yet-present ``url_hash`` values into the
+        bloom (the caller appends them to the exact source): OR-merge the
+        blooms per partition executor-side (cogroup of new hashes × bloom
+        rows on ``part_id``) and write the merged bloom table back from
+        the executors. The driver learns only ONE scalar (max overflow
+        bytes, via ``observe`` riding the write) to decide whether any
+        partition needs a rebuild.
 
-        ``defer_bloom=True`` skips the merge job and marks the bloom
-        behind (the EXACT set is still updated — with ``exact_source``
-        set this call then submits no job, since that source table is
-        maintained by the caller). The next merging ``add`` on a bloom
-        known behind — the round that crosses ``probe_min_rows`` —
-        rebuilds every partition from exact ∪ new instead of merging,
-        concurrently with the caller's own append of ``new`` to the
-        exact source (hashes are deduplicated per partition, so a
-        source that already holds them is not double-counted). Measured
-        rationale: while the seen set is below ``probe_min_rows`` the
-        bloom is never probed, and the per-round merge job was ~12% of
-        the headline crawl's wall — maintenance for a reader that does
-        not exist yet; deferring converts it into one rebuild at the
-        threshold crossing, amortized over the crawl's lifetime."""
-        hdf = self.with_part_id(new_hashes.select(F.col(col).alias("url_hash")))
-        if defer_bloom:
+        ``approx_seen_rows`` is the seen-set size the caller passed to
+        ``filter_new`` for these hashes. Below ``probe_min_rows`` the
+        merge is deferred: no job, the bloom is marked behind. The next
+        merging ``add`` on a bloom known behind — the round that crosses
+        ``probe_min_rows`` — rebuilds every partition from exact ∪ new
+        instead of merging, concurrently with the caller's own append of
+        ``new`` to the exact source (hashes are deduplicated per
+        partition, so a source that already holds them is not
+        double-counted). Measured rationale: while the seen set is below
+        ``probe_min_rows`` the bloom is never probed, and the per-round
+        merge job was ~12% of the headline crawl's wall — maintenance for
+        a reader that does not exist yet; deferring converts it into one
+        rebuild at the threshold crossing, amortized over the crawl's
+        lifetime."""
+        if self._below_gate(approx_seen_rows):
             self._bloom_synced = False
-            if self.exact_source is None:
-                self.cat.append("seen", hdf)
             return
-        hdf = hdf.persist()
-        if self.exact_source is None:
-            self.cat.append("seen", hdf)  # else: the source table IS the exact set
+        hdf = self.with_part_id(new_hashes.select("url_hash"))
         if self._bloom_synced is False:
             self._rebuild_full(extra=hdf)
             self._bloom_synced = True
-            hdf.unpersist()
             return
 
         bloom_df = self.cat.read("bloom")
@@ -264,19 +250,18 @@ class SeenSet:
             .applyInPandas(merge, schema=BLOOM_DDL)
         )
         obs = Observation()
-        merged = merged.observe(obs, F.max(F.octet_length("overflow")).alias("max_ovf"))
-        self.cat.overwrite("bloom", merged)
-        hdf.unpersist()
-        try:
-            max_ovf = int(obs.get["max_ovf"] or 0)
-        except Exception:  # AQE may elide CollectMetrics on empty relations
-            max_ovf = int(
-                self.cat.read("bloom").agg(
-                    F.max(F.octet_length("overflow")).alias("m")
-                ).collect()[0]["m"] or 0
-            )
-        if max_ovf // 8 > self.overflow_rebuild:
-            self._rebuild_overflowed()
+        max_ovf_of = F.max(F.octet_length("overflow")).alias("max_ovf")
+        self.cat.overwrite("bloom", merged.observe(obs, max_ovf_of))
+        max_ovf = _obs_get(obs, lambda: self.cat.read("bloom").agg(max_ovf_of).collect()[0])
+        if int(max_ovf["max_ovf"] or 0) // 8 > self.overflow_rebuild:
+            # partitions whose overflow passed the threshold get a fresh
+            # bloom at 2× m; the driver collects only (part_id, m_bits) ints
+            self._rebuild_full(over={
+                int(r["part_id"]): int(r["m_bits"]) * 2
+                for r in self.cat.read("bloom")
+                .filter(F.octet_length("overflow") / 8 > self.overflow_rebuild)
+                .select("part_id", "m_bits").collect()
+            })
 
     def _ensure_bloom_covers(self) -> None:
         """Verify the bloom covers the exact set (deferred merges leave
@@ -286,11 +271,11 @@ class SeenSet:
 
         Check: Σ n_items over bloom rows vs count(exact). Deferral in
         the filter_new/add protocol skips exactly the rows it appends,
-        so Σ n_items < exact count ⇔ some hash was never merged (a
-        duplicate standalone add can only INFLATE n_items, and a
-        duplicate's bits are already set — the criterion never
-        under-triggers). Both sides are O(P)-scalar / one count job,
-        paid only while ``_bloom_synced`` is unknown or False."""
+        so Σ n_items < exact count ⇔ some hash was never merged (the
+        exact source holds each hash once, and a merge counts only the
+        hashes it inserts — the criterion never under-triggers). Both
+        sides are O(P)-scalar / one count job, paid only while
+        ``_bloom_synced`` is unknown or False."""
         if self._bloom_synced:
             return
         exact_n = self._exact().count()
@@ -301,24 +286,31 @@ class SeenSet:
             self._rebuild_full()
         self._bloom_synced = True
 
-    def _rebuild_full(self, extra: DataFrame | None = None) -> None:
-        """Rebuild EVERY bloom partition from the exact set (plus the
+    def _rebuild_full(self, extra: DataFrame | None = None,
+                      over: dict[int, int] | None = None) -> None:
+        """Rebuild bloom partitions from the exact set (plus the
         ``url_hash``/``part_id`` rows of ``extra``) in one executor-side
-        grouped-map pass; each partition deduplicates its hashes — a
-        hash in both inputs counts once — and sizes itself so its
-        capacity covers its distinct count (same 2× geometric growth as
-        the overflow rebuild — n is known inside the task, so no driver
-        statistics are needed). Empty partitions simply have no row,
-        which the probe already treats as all-new."""
+        grouped-map pass; each partition deduplicates its hashes — a hash
+        in both inputs counts once. Without ``over`` EVERY partition is
+        rebuilt and sizes itself so its capacity covers its distinct
+        count (2× geometric growth from the default m — n is known inside
+        the task, so no driver statistics are needed); empty partitions
+        simply have no row, which the probe already treats as all-new.
+        ``over`` (``{part_id: m_bits}``, the overflow rebuild) rebuilds
+        only those partitions, at the given sizes, and keeps the other
+        partitions' rows."""
         k, m_default = self.k, self.m_bits
 
         def rebuild(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pid = int(key[0])
             hv = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
             n = len(hv)
-            m_bits = m_default
-            while int(m_bits * 0.693 / k) < n:
-                m_bits *= 2
+            if over is not None:
+                m_bits = over[pid]
+            else:
+                m_bits = m_default
+                while int(m_bits * 0.693 / k) < n:
+                    m_bits *= 2
             bits = np.zeros(m_bits // 8, dtype=np.uint8)
             _set_bits(bits, hv, m_bits, k)
             return pd.DataFrame({
@@ -329,41 +321,10 @@ class SeenSet:
         src = self.with_part_id(self._exact())
         if extra is not None:
             src = src.unionByName(extra.select("url_hash", "part_id"))
+        if over is not None:
+            src = src.filter(F.col("part_id").isin(list(over)))
         rebuilt = src.groupBy("part_id").applyInPandas(rebuild, schema=BLOOM_DDL)
+        if over is not None:
+            keep = self.cat.read("bloom").filter(~F.col("part_id").isin(list(over)))
+            rebuilt = keep.unionByName(rebuilt)
         self.cat.overwrite("bloom", rebuilt)
-
-    def _rebuild_overflowed(self) -> None:
-        """Partitions whose overflow passed the threshold get a fresh
-        bloom at 2× m rebuilt from the exact seen partition — grouped-map
-        executor-side; the driver collects only (part_id, m_bits) ints."""
-        bloom_df = self.cat.read("bloom")
-        over = {
-            int(r["part_id"]): int(r["m_bits"]) * 2
-            for r in bloom_df
-            .filter(F.octet_length("overflow") / 8 > self.overflow_rebuild)
-            .select("part_id", "m_bits").collect()
-        }
-        if not over:
-            return
-        k = self.k
-
-        def rebuild(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(key[0])
-            m_bits = over[pid]
-            hv = pdf["url_hash"].to_numpy(dtype=np.int64)
-            bits = np.zeros(m_bits // 8, dtype=np.uint8)
-            _set_bits(bits, hv, m_bits, k)
-            return pd.DataFrame({
-                "part_id": [pid], "m_bits": [m_bits], "bloom": [bits.tobytes()],
-                "n_items": [len(hv)], "overflow": [b""],
-            })
-
-        over_ids = list(over)
-        rebuilt = (
-            self.with_part_id(self._exact())
-            .filter(F.col("part_id").isin(over_ids))
-            .groupBy("part_id")
-            .applyInPandas(rebuild, schema=BLOOM_DDL)
-        )
-        keep = bloom_df.filter(~F.col("part_id").isin(over_ids))
-        self.cat.overwrite("bloom", keep.unionByName(rebuilt))

@@ -107,8 +107,16 @@ def _run_engine(spark, web_dir, job_dir, corpus_size, **cfg_kw):
     cat = ManifestCatalog(spark, job_dir)
     corpus = cat.read("corpus").toPandas().sort_values(
         ["fetch_round", "fetch_vt", "url_hash"]).reset_index(drop=True)
-    seen = {r["url_hash"] for r in cat.read("frontier").select("url_hash").collect()}
-    metrics = cat.read("metrics").filter("part_id = -1").toPandas().sort_values("round")
+    frontier = [r["url_hash"] for r in cat.read("frontier").select("url_hash").collect()]
+    seen = set(frontier)
+    # the frontier is the only exact seen set: each url_hash enters it once
+    assert len(frontier) == len(seen), "frontier url_hash not unique"
+    all_metrics = cat.read("metrics").toPandas()
+    metrics = all_metrics[all_metrics["part_id"] == -1].sort_values("round")
+    # per-bucket lineage rows sum to their round's rollup `fetched`
+    per_bucket = all_metrics[all_metrics["part_id"] >= 0].groupby("round")["fetched"].sum()
+    for rnd, fetched in zip(metrics["round"], metrics["fetched"]):
+        assert int(per_bucket.get(rnd, 0)) == int(fetched), f"r{rnd}: bucket rows != fetched"
     redirects = {r["url_hash"] for r in cat.read("redirects").select("url_hash").collect()}
     return res, corpus, seen, metrics, redirects
 

@@ -6,7 +6,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Observation
 
 from pegasus_spark import lineage
-from pegasus_spark.round import _obs_get
+from pegasus_spark.lineage import _obs_get
 
 
 def test_obs_get_fallback_is_logged(spark, caplog):

@@ -18,14 +18,30 @@ def _hashes_df(spark, vals):
     return spark.createDataFrame([(int(v),) for v in vals], "url_hash long")
 
 
+def _seen_set(cat, **kw):
+    """A SeenSet under the crawl's contract: its exact set is a ``src``
+    table (the crawl's frontier), and each ``add`` appends its hashes to
+    ``src`` first, as the crawl appends them to the frontier."""
+    cat.create("src", "url_hash long")
+    s = SeenSet(cat, exact_source=lambda: cat.read("src"), **kw)
+    add = s.add
+
+    def add_to_src_first(df, **add_kw):
+        cat.append("src", df)
+        add(df, **add_kw)
+
+    s.add = add_to_src_first
+    return s
+
+
 def test_filter_new_empty_set(spark, cat):
-    s = SeenSet(cat, n_parts=2)
+    s = _seen_set(cat, n_parts=2)
     df = _hashes_df(spark, [1, 2, 3])
     assert s.filter_new(df).count() == 3
 
 
 def test_add_then_filter_exact(spark, cat):
-    s = SeenSet(cat, n_parts=2)
+    s = _seen_set(cat, n_parts=2)
     s.add(_hashes_df(spark, range(100)))
     out = {r["url_hash"] for r in s.filter_new(_hashes_df(spark, range(50, 150))).collect()}
     assert out == set(range(100, 150))
@@ -34,7 +50,7 @@ def test_add_then_filter_exact(spark, cat):
 def test_forced_collisions_still_exact(spark, cat):
     # tiny bloom (m=64 bits, k=2) → massive false-positive rate; the
     # exact anti-join must still yield a correct result
-    s = SeenSet(cat, n_parts=2, m_bits=64, k=2)
+    s = _seen_set(cat, n_parts=2, m_bits=64, k=2)
     rng = np.random.default_rng(5)
     a = rng.integers(-(2**62), 2**62, size=500).tolist()
     b = rng.integers(-(2**62), 2**62, size=500).tolist()
@@ -47,7 +63,7 @@ def test_forced_collisions_still_exact(spark, cat):
 
 
 def test_no_false_negatives(spark, cat):
-    s = SeenSet(cat, n_parts=4, m_bits=1 << 12, k=3)
+    s = _seen_set(cat, n_parts=4, m_bits=1 << 12, k=3)
     vals = list(range(1000))
     s.add(_hashes_df(spark, vals))
     # every added value must probe maybe_seen=True (bloom soundness)
@@ -58,7 +74,7 @@ def test_no_false_negatives(spark, cat):
 def test_overflow_and_rebuild(spark, cat):
     # capacity = m*0.693/k = 64*0.693/2 ≈ 22 → everything past ~22 goes
     # to overflow; overflow_rebuild=50 → rebuild doubles m
-    s = SeenSet(cat, n_parts=1, m_bits=64, k=2, overflow_rebuild=50)
+    s = _seen_set(cat, n_parts=1, m_bits=64, k=2, overflow_rebuild=50)
     s.add(_hashes_df(spark, range(30)))
     rows = cat.read("bloom").collect()
     assert len(rows) == 1 and len(rows[0]["overflow"]) > 0  # overflow engaged
@@ -70,6 +86,19 @@ def test_overflow_and_rebuild(spark, cat):
     probed = s.split_maybe_seen(_hashes_df(spark, list(range(30)) + list(range(1000, 1100))))
     assert probed.filter("NOT maybe_seen").count() == 0
     assert s.filter_new(_hashes_df(spark, [5, 1050, 99999])).count() == 1
+
+
+def test_overflow_rebuild_keeps_other_partitions(spark, cat):
+    # only partition 0 (the even hashes) overflows past the threshold: it
+    # is rebuilt at 2× m, and partition 1 keeps its merged row
+    s = _seen_set(cat, n_parts=2, m_bits=64, k=2, overflow_rebuild=50)
+    vals = [1, 3, 5] + list(range(0, 200, 2))
+    s.add(_hashes_df(spark, vals))
+    rows = {r["part_id"]: r for r in cat.read("bloom").collect()}
+    assert rows[0]["m_bits"] == 128 and len(rows[0]["overflow"]) == 0
+    assert rows[1]["m_bits"] == 64 and rows[1]["n_items"] == 3
+    probed = s.split_maybe_seen(_hashes_df(spark, vals))
+    assert probed.filter("NOT maybe_seen").count() == 0
 
 
 def test_driver_never_materializes_bloom_bytes(spark, cat, monkeypatch):
@@ -93,7 +122,7 @@ def test_driver_never_materializes_bloom_bytes(spark, cat, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", spy_collect)
     monkeypatch.setattr(DataFrame, "toPandas", spy_topandas)
 
-    s = SeenSet(cat, n_parts=64, m_bits=1 << 10, k=3, overflow_rebuild=8)
+    s = _seen_set(cat, n_parts=64, m_bits=1 << 10, k=3, overflow_rebuild=8)
     s.add(_hashes_df(spark, range(2000)))          # small m → overflow + rebuild
     s.add(_hashes_df(spark, range(2000, 2500)))
     got = {r["url_hash"] for r in s.filter_new(_hashes_df(spark, range(1500, 3000))).collect()}
@@ -107,11 +136,11 @@ def test_driver_never_materializes_bloom_bytes(spark, cat, monkeypatch):
 
 
 def test_incremental_adds_match_bulk(spark, cat, tmp_path):
-    s1 = SeenSet(cat, n_parts=2, m_bits=1 << 10, k=3)
+    s1 = _seen_set(cat, n_parts=2, m_bits=1 << 10, k=3)
     for lo in range(0, 300, 100):
         s1.add(_hashes_df(spark, range(lo, lo + 100)))
     cat2 = ManifestCatalog(spark, str(tmp_path / "cat2"))
-    s2 = SeenSet(cat2, n_parts=2, m_bits=1 << 10, k=3)
+    s2 = _seen_set(cat2, n_parts=2, m_bits=1 << 10, k=3)
     s2.add(_hashes_df(spark, range(300)))
     q = list(range(250, 400))
     got1 = {r["url_hash"] for r in s1.filter_new(_hashes_df(spark, q)).collect()}
@@ -130,16 +159,16 @@ def test_deferred_bloom_skip_and_rebuild_at_crossing(spark, cat):
     behind (no probe, no bloom write ahead of the rows); the crossing
     round's merging add rebuilds every partition from exact ∪ new, after
     which the bloom is in sync, sound, and merged incrementally."""
-    s = SeenSet(cat, n_parts=2, probe_min_rows=100)
-    s.add(_hashes_df(spark, range(50)), defer_bloom=True)
+    s = _seen_set(cat, n_parts=2, probe_min_rows=100)
+    s.add(_hashes_df(spark, range(50)), approx_seen_rows=0)
     v0 = cat.current_version("bloom")
     for approx in (50, 200):  # below, then past the threshold
         q = s.filter_new(_hashes_df(spark, range(40, 60)), approx_seen_rows=approx)
         assert "FlatMapCoGroupsInPandas" not in q._jdf.queryExecution().optimizedPlan().toString()
         assert {r["url_hash"] for r in q.collect()} == set(range(50, 60))
     assert cat.current_version("bloom") == v0
-    # the crossing add: the exact table already holds the new hashes
-    # (standalone add appends them first), and they count once
+    # the crossing add: the exact source already holds the new hashes
+    # (the helper appends them first), and they count once
     s.add(_hashes_df(spark, range(50, 60)))
     assert _n_items(cat) == 60
     v1 = cat.current_version("bloom")
@@ -158,18 +187,15 @@ def test_deferred_bloom_skip_and_rebuild_at_crossing(spark, cat):
 
 
 def test_crossing_add_counts_a_racing_source_append_once(spark, cat):
-    """With an exact source (the crawl's frontier), the crossing round's
-    add runs concurrently with the caller's append of the same new
-    hashes to that source; if the append lands first, the rebuild sees
-    them in both inputs and must still count each hash once."""
-    cat.create("src", "url_hash long")
-    s = SeenSet(cat, n_parts=4, probe_min_rows=10,
-                exact_source=lambda: cat.read("src"))
-    cat.append("src", _hashes_df(spark, range(100)))
-    s.add(_hashes_df(spark, range(100)), defer_bloom=True)
-    assert cat.is_empty("bloom")  # a deferred add with a source writes nothing
-    cat.append("src", _hashes_df(spark, range(100, 150)))  # the racing append
-    s.add(_hashes_df(spark, range(100, 150)))
+    """The crossing round's add runs concurrently with the caller's
+    append of the same new hashes to the exact source (the crawl's
+    frontier); if the append lands first, the rebuild sees them in both
+    inputs and must still count each hash once."""
+    s = _seen_set(cat, n_parts=4, probe_min_rows=10)
+    s.add(_hashes_df(spark, range(100)), approx_seen_rows=0)
+    assert cat.is_empty("bloom")  # a deferred add writes nothing
+    # the helper's append to src lands first, as the racing append can
+    s.add(_hashes_df(spark, range(100, 150)), approx_seen_rows=100)
     assert _n_items(cat) == 150
     probed = s.split_maybe_seen(_hashes_df(spark, range(150)))
     assert probed.filter("NOT maybe_seen").count() == 0
@@ -179,17 +205,18 @@ def test_fresh_instance_verifies_in_sync_bloom_without_rebuild(spark, cat):
     """A fresh (resumed) instance does not know the bloom's state: its
     first probe verifies Σ n_items against the exact set and rebuilds
     only a bloom that is behind."""
-    SeenSet(cat, n_parts=2).add(_hashes_df(spark, range(100)))
+    _seen_set(cat, n_parts=2).add(_hashes_df(spark, range(100)))
     v0 = cat.current_version("bloom")
-    s = SeenSet(cat, n_parts=2, probe_min_rows=10)
+    s = _seen_set(cat, n_parts=2, probe_min_rows=10)
     out = {r["url_hash"]
            for r in s.filter_new(_hashes_df(spark, range(90, 110)),
                                  approx_seen_rows=100).collect()}
     assert out == set(range(100, 110))
     assert cat.current_version("bloom") == v0
     # behind: a deferred add by another instance, then a fresh one probes
-    SeenSet(cat, n_parts=2).add(_hashes_df(spark, range(200, 250)), defer_bloom=True)
-    s = SeenSet(cat, n_parts=2, probe_min_rows=10)
+    _seen_set(cat, n_parts=2, probe_min_rows=1000).add(
+        _hashes_df(spark, range(200, 250)), approx_seen_rows=100)
+    s = _seen_set(cat, n_parts=2, probe_min_rows=10)
     probed = s.split_maybe_seen(_hashes_df(spark, range(200, 250)))
     assert probed.filter("NOT maybe_seen").count() == 0
     assert cat.current_version("bloom") == v0 + 1
@@ -200,11 +227,11 @@ def test_split_maybe_seen_sound_after_deferred_add(spark, cat):
     """A deferred merge leaves the bloom behind the exact set (empty, or
     missing the deferred hashes); a direct split_maybe_seen must bring it
     up to date first, so every added hash still probes maybe_seen=True."""
-    s = SeenSet(cat, n_parts=2)
-    s.add(_hashes_df(spark, range(50)), defer_bloom=True)
+    s = _seen_set(cat, n_parts=2, probe_min_rows=100)
+    s.add(_hashes_df(spark, range(50)), approx_seen_rows=0)
     probed = s.split_maybe_seen(_hashes_df(spark, range(50)))
     assert probed.filter("NOT maybe_seen").count() == 0
     # and over a non-empty bloom that lacks the deferred hashes
-    s.add(_hashes_df(spark, range(1000, 1050)), defer_bloom=True)
+    s.add(_hashes_df(spark, range(1000, 1050)), approx_seen_rows=50)
     probed = s.split_maybe_seen(_hashes_df(spark, range(1000, 1050)))
     assert probed.filter("NOT maybe_seen").count() == 0
