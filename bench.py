@@ -127,7 +127,7 @@ def crawl_bench(spark, n_pages: int, verbose: bool = False,
     from pegasus_spark.crawl import crawl
     from pegasus_spark.fixtures import WebParams, materialize
 
-    if profile in ("drain_giant", "drain_giant_shuffle", "drain_giant_bucketed"):
+    if profile in ("drain_giant", "drain_giant_shuffle"):
         # ONE giant fetch round (every page seeded, W covers the hottest
         # host): the per-round driver time a 10^10-URL crawl amortizes to
         # ~0 is amortized the same way here; decode+validate dominates.
@@ -144,25 +144,13 @@ def crawl_bench(spark, n_pages: int, verbose: bool = False,
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "fixtures"),
             procs=16,
         )
-        extra = {}
-        if profile == "drain_giant_bucketed":
-            # the 10^7-10^8-URL-round strategy *with* the store laid out
-            # as a bucket(B, url_hash) table: the fetch join runs
-            # bucket-wise (SPJ shape, zero payload shuffle). Relayout is
-            # one-time table maintenance — outside the crawl clock.
-            from pegasus_spark.fetch import bucketize_store
-
-            B = int(os.environ.get("PEGASUS_STORE_BUCKETS", "16"))
-            bdir = bucketize_store(spark, web_dir, B)
-            extra = dict(pages_bucketed_dir=bdir)
         return _run_crawl(
             spark, web_dir, round_width_vt=2_000_000,
             verbose=verbose, cache_pages=False,
-            # drain_giant_shuffle / _bucketed: force the size-gated fetch
-            # past its broadcast ceiling so the giant-round join strategy
-            # (shuffle vs bucket-wise SPJ) carries the whole drain
-            fetch_broadcast_max=0 if profile != "drain_giant" else 2_000_000,
-            **extra,
+            # drain_giant_shuffle: force the size-gated fetch past its
+            # broadcast ceiling so the giant-round shuffle join carries
+            # the whole drain
+            fetch_broadcast_max=0 if profile == "drain_giant_shuffle" else 2_000_000,
         )
     if profile == "drain":
         # few huge rounds, png-only payloads (decode cost ≈ real-world

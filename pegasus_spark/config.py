@@ -107,16 +107,11 @@ class CrawlConfig:
         "parquet.block.size": str(16 * 1024 * 1024),
         "parquet.enable.dictionary": "false",
     })
-    # bucket-partitioned layouts (Iceberg bucket(B, url_hash) transform
-    # analogue — see tables.bucketwise_join): pages_bucketed_dir points at
-    # a fetch.bucketize_store() relayout of the page store, whose B is
-    # read from the relayout itself; giant rounds past
-    # fetch_broadcast_max then fetch and extract bucket-wise.
-    # table_bucket_count>0 creates frontier+corpus bucket-partitioned (a
-    # resume keeps the B the tables were created with) and runs the
-    # pending anti-join bucket-wise — the zero-data-shuffle dedup shape
-    # for 10^10-row frontiers.
-    pages_bucketed_dir: Optional[str] = None
+    # table_bucket_count>0 creates frontier+corpus bucket-partitioned
+    # (Iceberg bucket(B, url_hash) transform analogue — see
+    # tables.bucketwise_join; a resume keeps the B the tables were created
+    # with) and runs the pending anti-join bucket-wise — the
+    # zero-data-shuffle dedup shape for 10^10-row frontiers.
     table_bucket_count: int = 0
     # incremental catalog compaction (Iceberg rewrite_data_files
     # analogue): every compact_every rounds, the append-heavy tables are

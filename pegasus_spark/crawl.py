@@ -73,12 +73,11 @@ def _make_ctx(spark: SparkSession, cfg: CrawlConfig) -> tuple[RoundContext, Chec
     # Spark's near-unbounded default maxPlanStringLength (2^31) that
     # string alone OOMed a 1 GB driver on a 10-round toy crawl; at the
     # 10^4-round design point it would OOM any driver. Cap it (runtime
-    # SQL conf) unless the user already chose a bound.
-    try:
-        if int(spark.conf.get("spark.sql.maxPlanStringLength")) > 10_000_000:
-            spark.conf.set("spark.sql.maxPlanStringLength", "200000")
-    except Exception:
-        pass
+    # SQL conf) unless the user already chose a bound. The conf is a byte
+    # size (the default reads back as '2147483632b'), so the JVM's parsed
+    # value is compared, not the string.
+    if spark._jsparkSession.sessionState().conf().maxPlanStringLength() > 10_000_000:
+        spark.conf.set("spark.sql.maxPlanStringLength", "200000")
     cat = ManifestCatalog(spark, cfg.job_dir)
     # Iceberg bucket(B, url_hash) partition-transform analogue on the two
     # data-sized tables: every append lands directory-per-bucket, and the
@@ -119,7 +118,7 @@ def _make_ctx(spark: SparkSession, cfg: CrawlConfig) -> tuple[RoundContext, Chec
         crawl_delays = load_crawl_delays(spark, robots_path)
     else:
         raise ValueError(f"unknown robots_mode {cfg.robots_mode!r}")
-    pages = load_pages(spark, cfg.web_dir, cfg.pages_bucketed_dir)
+    pages = load_pages(spark, cfg.web_dir)
     if cfg.cache_pages:
         pages = pages.persist()
     ctx = RoundContext(

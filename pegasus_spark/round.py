@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from . import politeness
 from .canon import resolve_canonicalize
 from .config import CrawlConfig
-from .fetch import fetch_and_validate, store_bucket_count
+from .fetch import broadcast_selection, fetch_and_validate
 from .lineage import _obs_get, free_checkpoint
 from .seen import SeenSet
 from .tables import ManifestCatalog, bucket_of, bucketwise_join
@@ -359,17 +359,17 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         # is cheaper (identical selection — politeness.schedule docstring)
         prune=ctx.approx_frontier_rows >= cfg.politeness_prune_min_rows,
     )
-    # Every consumer (fetch, extract, host clocks, each redirect hop and,
-    # on bucketed layouts, each of their B slices) reads only the
-    # selected rows, so only those are materialized: one eager
-    # localCheckpoint roots the round-bounded selection (≤ hosts·budget
-    # rows, not the whole pending frontier) as a LogicalRDD, so no
-    # consumer re-plans the frontier-scan → anti-join → window subtree
-    # (re-embedded per bucket and per hop it grew to O(B²·hops) plan
-    # nodes and OOMed a 4 GB driver on a 120-page bucketed crawl). The
-    # pending/selected counts ride that same job via observe(), so they
-    # are known before the branch fan-out — for the corpus-size
-    # truncation, and so an exhausted frontier exits before any write.
+    # Every consumer (fetch, extract, host clocks, each redirect hop)
+    # reads only the selected rows, so only those are materialized: one
+    # eager localCheckpoint roots the round-bounded selection
+    # (≤ hosts·budget rows, not the whole pending frontier) as a
+    # LogicalRDD, so no consumer re-plans the frontier-scan → anti-join →
+    # window subtree (re-embedded per bucket and per hop it grew to
+    # O(B²·hops) plan nodes and OOMed a 4 GB driver on a 120-page bucketed
+    # crawl). The pending/selected counts ride that same job via
+    # observe(), so they are known before the branch fan-out — for the
+    # corpus-size truncation, and so an exhausted frontier exits before
+    # any write.
     obs_s = Observation()
     root = sched.observe(
         obs_s,
@@ -537,29 +537,17 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
             )
         else:
             sel_keys = sel_keys.withColumn("_content_hash", F.col("url_hash"))
-        bcast_sel = cfg.fetch_broadcast_max > 0 and n_sel <= cfg.fetch_broadcast_max
         page_links = ctx.pages
         if cfg.extract_fmts is not None:
             # content-type gate (pegasus drops non-HTML before extraction):
             # non-crawlable payloads stay fetched/visited, yield no links
             page_links = page_links.filter(F.col("fmt").isin(list(cfg.extract_fmts)))
-        sb = store_bucket_count(ctx.pages)
-        if not bcast_sel and sb:
-            # giant-round path over the bucketed store: same SPJ shape as
-            # the fetch join — out_links scan pruned per bucket, 1/B
-            # selection slices broadcast, zero shuffle
-            joined_links = bucketwise_join(
-                sb,
-                lambda b: (page_links.where(F.col("_bucket") == b)
-                           .select(F.col("url_hash").alias("_content_hash"), "out_links")),
-                lambda b: sel_keys.where(bucket_of("_content_hash", sb) == b),
-                "_content_hash", "inner")
-        else:
-            sel_in = F.broadcast(sel_keys) if bcast_sel else sel_keys
-            joined_links = (
-                page_links.select(F.col("url_hash").alias("_content_hash"), "out_links")
-                .join(sel_in, "_content_hash", "inner")
-            )
+        sel_in = (F.broadcast(sel_keys)
+                  if broadcast_selection(n_sel, cfg.fetch_broadcast_max) else sel_keys)
+        joined_links = (
+            page_links.select(F.col("url_hash").alias("_content_hash"), "out_links")
+            .join(sel_in, "_content_hash", "inner")
+        )
         links = (
             joined_links
             .filter(F.col("out_links").isNotNull())

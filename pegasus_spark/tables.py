@@ -38,8 +38,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 def bucket_of(col: str | Column, n: int) -> Column:
     """The ``bucket(n, col)`` layout: a row's bucket is ``pmod(col, n)``.
     Every bucket assignment and bucket slice goes through here, so a
-    table, the bucketized page store and the slices joined against them
-    always agree. A NULL key has no bucket."""
+    bucketed table and the slices joined against it always agree. A NULL
+    key has no bucket."""
     return F.pmod(F.col(col) if isinstance(col, str) else col, F.lit(n)).cast("int")
 
 
@@ -377,11 +377,7 @@ class ManifestCatalog:
         for n, v in versions.items():
             if not os.path.exists(self._mpath(n, v)):
                 raise ValueError(f"table {n} has no version {v}")
-            cur = os.path.join(self._mdir(n), "CURRENT")
-            tmp = cur + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(v))
-            os.replace(tmp, cur)
+            self._swap_current(n, v)
 
 
 class CheckpointStore:

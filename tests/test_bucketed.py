@@ -2,8 +2,8 @@
 
 Covers VERDICT r3 'missing #2': the catalog's bucket_by table property,
 directory-per-bucket writes, per-bucket reads, the SPJ-shaped
-bucket-wise join helper and fetch join (zero payload shuffle), and full-crawl
-equivalence between the default and fully-bucketed engines.
+bucket-wise join helper, and full-crawl equivalence between the default
+and fully-bucketed engines.
 """
 
 import shutil
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from pegasus_spark.config import CrawlConfig
 from pegasus_spark.crawl import crawl
-from pegasus_spark.fetch import bucketize_store, fetch_and_validate, load_pages
 from pegasus_spark.fixtures import WebParams, generate_web, write_web
 from pegasus_spark.tables import ManifestCatalog, bucket_of, bucketwise_join
 
@@ -86,48 +85,11 @@ def test_bucketwise_join_matches_plain_join(spark, how):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_bucketed_fetch_join_no_shuffle(spark):
-    """The giant-round fetch join over a bucketed store must plan with
-    ZERO hash-shuffle exchanges — only per-bucket broadcasts (the SPJ
-    shape). Also: identical rows to the plain shuffle path."""
-    tmp = tempfile.mkdtemp()
-    try:
-        web = generate_web(WebParams(seed=91, n_pages=120, n_hosts=5,
-                                     fanout=2.0, n_seeds=3))
-        write_web(web, f"{tmp}/web")
-        bdir = bucketize_store(spark, f"{tmp}/web", 4)
-        pages_b = load_pages(spark, f"{tmp}/web", bdir)
-        pages_p = load_pages(spark, f"{tmp}/web")
-        sel = (
-            spark.read.parquet(f"{tmp}/web/pages.parquet")
-            .where(F.pmod("url_hash", F.lit(3)) == 0)
-            .select("url", "url_hash", "host")
-            .withColumn("priority", F.lit(0))
-            .withColumn("fetch_vt", F.lit(0).cast("long"))
-        )
-        # selection_count above broadcast_max=1 forces the giant-round path
-        out_b = fetch_and_validate(sel, pages_b, 8, validate=False,
-                                   selection_count=10, broadcast_max=1)
-        out_p = fetch_and_validate(sel, pages_p, 8, validate=False,
-                                   selection_count=10, broadcast_max=1)
-        plan = _explain(out_b)
-        assert "Exchange hashpartitioning" not in plan, \
-            "bucketed fetch join must not shuffle"
-        assert "BroadcastExchange" in plan
-
-        key = ["url_hash", "image_id", "valid", "fetch_status"]
-        rows_b = sorted(map(tuple, out_b.select(*key).collect()))
-        rows_p = sorted(map(tuple, out_p.select(*key).collect()))
-        assert rows_b == rows_p and len(rows_b) > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_bucketed_crawl_equivalence(spark):
-    """Full crawl with EVERYTHING bucketed (store relayout + bucket-wise
-    fetch/extract joins + bucketed frontier/corpus tables + bucket-wise
-    pending anti-join, broadcast gate forced off) produces the exact
-    corpus, frontier and metrics of the default engine."""
+    """Full crawl with the bucketed frontier/corpus tables, the
+    bucket-wise pending anti-join and the shuffle fetch/extract joins
+    (broadcast gate forced off) produces the exact corpus, frontier and
+    metrics of the default engine."""
     tmp = tempfile.mkdtemp()
     try:
         web = generate_web(WebParams(seed=77, n_pages=150, n_hosts=6,
@@ -152,13 +114,12 @@ def test_bucketed_crawl_equivalence(spark):
             return corpus, frontier, metrics
 
         base = run("job_default")
-        bdir = bucketize_store(spark, f"{tmp}/web", 4)
         # bloom_probe_min_rows=0 forces every size-gated plan onto its
         # big-data shape (bucket-wise SPJ pending anti-join, bloom probe
         # + per-round merge) so the production plan forms stay exercised
         # end to end on a tiny fixture — r6's size gates otherwise pick
         # the small-data shapes here
-        bucketed = run("job_bucketed", pages_bucketed_dir=bdir, table_bucket_count=4,
+        bucketed = run("job_bucketed", table_bucket_count=4,
                        fetch_broadcast_max=0, bloom_probe_min_rows=0,
                        politeness_prune_min_rows=0)
         assert bucketed[0] == base[0]

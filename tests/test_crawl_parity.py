@@ -107,16 +107,22 @@ def _run_engine(spark, web_dir, job_dir, corpus_size, **cfg_kw):
     cat = ManifestCatalog(spark, job_dir)
     corpus = cat.read("corpus").toPandas().sort_values(
         ["fetch_round", "fetch_vt", "url_hash"]).reset_index(drop=True)
-    frontier = [r["url_hash"] for r in cat.read("frontier").select("url_hash").collect()]
-    seen = set(frontier)
+    frontier = cat.read("frontier").select("url_hash", "discovered_round").toPandas()
+    seen = set(frontier["url_hash"].tolist())
     # the frontier is the only exact seen set: each url_hash enters it once
     assert len(frontier) == len(seen), "frontier url_hash not unique"
     all_metrics = cat.read("metrics").toPandas()
     metrics = all_metrics[all_metrics["part_id"] == -1].sort_values("round")
-    # per-bucket lineage rows sum to their round's rollup `fetched`
+    # per-bucket lineage rows sum to their round's rollup `fetched`;
+    # round r's corpus rows number its `fetched` and its frontier
+    # appends (discovered_round r+1) its `enqueued`
     per_bucket = all_metrics[all_metrics["part_id"] >= 0].groupby("round")["fetched"].sum()
-    for rnd, fetched in zip(metrics["round"], metrics["fetched"]):
+    per_round = corpus.groupby("fetch_round").size()
+    per_disc = frontier.groupby("discovered_round").size()
+    for rnd, fetched, enq in zip(metrics["round"], metrics["fetched"], metrics["enqueued"]):
         assert int(per_bucket.get(rnd, 0)) == int(fetched), f"r{rnd}: bucket rows != fetched"
+        assert int(per_round.get(rnd, 0)) == int(fetched), f"r{rnd}: corpus rows != fetched"
+        assert int(per_disc.get(rnd + 1, 0)) == int(enq), f"r{rnd}: frontier rows != enqueued"
     redirects = {r["url_hash"] for r in cat.read("redirects").select("url_hash").collect()}
     return res, corpus, seen, metrics, redirects
 

@@ -1,4 +1,5 @@
-"""Silent fallbacks are logged on the ``pegasus_spark`` logger."""
+"""Silent fallbacks are logged on the ``pegasus_spark`` logger, and a
+crawl's start-up conf cap applies without one."""
 
 import logging
 
@@ -6,6 +7,9 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Observation
 
 from pegasus_spark import lineage
+from pegasus_spark.config import CrawlConfig
+from pegasus_spark.crawl import _make_ctx
+from pegasus_spark.fixtures import WebParams, generate_web, write_web
 from pegasus_spark.lineage import _obs_get
 
 
@@ -28,3 +32,21 @@ def test_free_checkpoint_fallback_is_logged_once(caplog, monkeypatch):
         lineage.free_checkpoint(_Unreachable())
         lineage.free_checkpoint(_Unreachable())
     assert sum("free_checkpoint" in r.getMessage() for r in caplog.records) == 1
+
+
+def test_crawl_start_caps_plan_string_length(spark, tmp_path):
+    """Crawl start-up caps spark.sql.maxPlanStringLength when it is at
+    Spark's default (a byte size that reads back as '2147483632b', not
+    an int) and keeps a smaller bound the user set."""
+    key = "spark.sql.maxPlanStringLength"
+    web = str(tmp_path / "web")
+    write_web(generate_web(WebParams(seed=3, n_pages=20, n_hosts=2, n_seeds=2)), web)
+    try:
+        spark.conf.unset(key)
+        _make_ctx(spark, CrawlConfig(web_dir=web, job_dir=str(tmp_path / "a")))
+        assert spark.conf.get(key) == "200000"
+        spark.conf.set(key, "50000")
+        _make_ctx(spark, CrawlConfig(web_dir=web, job_dir=str(tmp_path / "b")))
+        assert spark.conf.get(key) == "50000"
+    finally:
+        spark.conf.unset(key)

@@ -122,11 +122,19 @@ def test_driver_never_materializes_bloom_bytes(spark, cat, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", spy_collect)
     monkeypatch.setattr(DataFrame, "toPandas", spy_topandas)
 
-    s = _seen_set(cat, n_parts=64, m_bits=1 << 10, k=3, overflow_rebuild=8)
-    s.add(_hashes_df(spark, range(2000)))          # small m → overflow + rebuild
-    s.add(_hashes_df(spark, range(2000, 2500)))
+    # capacity = 128*0.693/3 = 29 per partition. The first add fills
+    # partitions 0-15 with 32 hashes (3 overflow) and the rest with 31
+    # (2 overflow); the second adds 8 more to partitions 0-3 and 16-63 and
+    # 7 to 4-15, all into overflow. Only partitions 0-3 pass 10 overflow
+    # hashes: the second add rebuilds them and keeps the other 60 rows.
+    s = _seen_set(cat, n_parts=64, m_bits=1 << 7, k=3, overflow_rebuild=10)
+    s.add(_hashes_df(spark, range(2000)))
+    s.add(_hashes_df(spark, range(2000, 2500)))    # small m → overflow + rebuild
     got = {r["url_hash"] for r in s.filter_new(_hashes_df(spark, range(1500, 3000))).collect()}
     assert got == set(range(2500, 3000))
+    rebuilt = {r["part_id"] for r in cat.read("bloom").select("part_id", "m_bits").collect()
+               if r["m_bits"] > 1 << 7}
+    assert rebuilt == {0, 1, 2, 3}
     for sch in collected_schemas:
         assert not any(f.dataType.typeName() == "binary" for f in sch.fields), (
             f"driver materialized bloom bytes: {sch.simpleString()}"
