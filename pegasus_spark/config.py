@@ -63,8 +63,9 @@ class CrawlConfig:
     #   plain exact anti-join (the frontier key column is ≤ ~tens of MB
     #   — a cheap broadcast/hash build) and skips the bloom probe's
     #   extra shuffle + two Arrow stages per round; above it, the bloom
-    #   prefilter pays for itself (at 10^10 rows it is what keeps the
-    #   anti-join's build side off the executors' memory).
+    #   probe runs first. It does not shrink the anti-join's exact side,
+    #   which is still shuffled or broadcast whole; it only spares the
+    #   rows it marks definitely-new the hash probe.
     # - politeness_prune_min_rows: below it, the two-stage politeness
     #   window skips its stage-1 per-(host,salt) prune — one fewer
     #   shuffle+sort per round; the prune exists to bound a HOT HOST's
@@ -137,7 +138,6 @@ class CrawlConfig:
     # written; mutations land in the checkpoint's ``stats`` blob, so a
     # user can persist custom per-round state without their own table
     update_state: Optional[Callable[[dict], None]] = None
-    extra: dict = field(default_factory=dict)
 
     @property
     def round_width(self) -> int:

@@ -40,20 +40,10 @@ rn−1 < W/delay), so:
    equal the one-stage ranks, so the selected set, fetch_vt values and
    host-clock advancement are bit-identical to the one-stage spec.
 
-Pruned rows re-enter the output with ``selected=false`` and NULL
-rn/fetch_vt (they are beyond the round horizon; their exact slot is not
-computed). Contract: ``rn``/``fetch_vt`` are exact for every SELECTED
-row and for every survivor whose rank ≤ cap (= ⌈W/delay⌉+1, the bound
-that decides selection) — so the selected set, the fetch_vt schedule and
-the host-clock advancement are bit-identical to the one-stage window.
-A survivor ranked PAST the cap (possible when rows of its host were
-pruned from other salt buckets below it) carries a LOWER-BOUND rn/
-fetch_vt, not the exact slot — such rows are provably non-selectable
-either way (rank > cap ⇒ fetch_vt ≥ round_end), so only their
-``selected=false`` marking is contractual; NULL likewise marks a row
-provably past the horizon. ``delay_ms = 0`` (no politeness floor)
-disables pruning for that host — every row is then selectable and goes
-through the exact window.
+The output is the selection alone, each row with its exact
+``rn``/``fetch_vt``; deferred rows are not returned.
+``delay_ms = 0`` (no politeness floor) disables pruning for that host —
+every row is then selectable and goes through the exact window.
 """
 
 from __future__ import annotations
@@ -77,12 +67,12 @@ def _with_delay(pending: DataFrame, host_state: DataFrame, min_delay_ms: int) ->
 
 def _prune_to_horizon(
     cand: DataFrame, round_start: int, round_end: int, salt_buckets: int
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Stage 1: per-(host, salt) partial top-K with K = ⌈W/delay⌉.
 
-    Returns (survivors, pruned). Survivors carry every row that could
-    possibly be selected this round; pruned rows are provably past the
-    horizon (their bucket-local rank alone puts fetch_vt ≥ round_end).
+    Returns the survivors: every row that could possibly be selected
+    this round. The rows it drops are provably past the horizon (their
+    bucket-local rank alone puts fetch_vt ≥ round_end).
     """
     W = round_end - round_start
     # +1 margin makes any float-rounding of W/delay provably irrelevant
@@ -98,8 +88,7 @@ def _prune_to_horizon(
         .withColumn("_srn", F.row_number().over(w1))
     )
     keep = F.col("_cap").isNull() | (F.col("_srn") <= F.col("_cap"))
-    aux = ["_salt", "_cap", "_srn"]
-    return staged.filter(keep).drop(*aux), staged.filter(~keep).drop(*aux)
+    return staged.filter(keep).drop("_salt", "_cap", "_srn")
 
 
 def schedule(
@@ -111,46 +100,36 @@ def schedule(
     salt_buckets: int = 32,
     prune: bool = True,
 ) -> DataFrame:
-    """Annotate pending URLs with (rn, delay_ms, fetch_vt, selected).
+    """The round's selection: pending URLs with ``fetch_vt < round_end``,
+    annotated with (rn, delay_ms, fetch_vt, selected).
 
     ``pending`` must carry: url, url_hash, host, priority,
     discovered_round, crawl_delay_ms (nullable). ``host_state``:
-    host, next_vt. Output has one row per pending row; see the module
-    docstring for the two-stage physical shape and the NULL-tail
-    contract on non-selectable rows.
+    host, next_vt. Output has one row per SELECTED pending row, with its
+    exact rn/fetch_vt; ``selected`` is always true (kept for callers
+    that filter on it).
 
     ``prune=False`` skips stage 1 and runs the exact per-host window on
     EVERY pending row — the size-adaptive fast path for small frontiers,
     where even the hottest host's full row set is one cheap task and the
-    salt window's extra shuffle+sort is pure overhead. The selected set,
-    fetch_vt schedule and host-clock advancement are identical either
-    way (stage 1 never changes them — module docstring); only the
-    non-selectable tail's rn/fetch_vt annotations differ (exact values
-    instead of the NULL lower-bound marking), which no consumer reads.
+    salt window's extra shuffle+sort is pure overhead. The output is
+    identical either way (stage 1 never drops a selectable row).
     """
     cand = _with_delay(pending, host_state, min_delay_ms)
     if prune:
-        survivors, pruned = _prune_to_horizon(cand, round_start, round_end, salt_buckets)
-    else:
-        survivors, pruned = cand, cand.limit(0)
+        cand = _prune_to_horizon(cand, round_start, round_end, salt_buckets)
     w = Window.partitionBy("host").orderBy(*_RANK_KEY)
-    exact = (
-        survivors.withColumn("rn", F.row_number().over(w))
+    return (
+        cand.withColumn("rn", F.row_number().over(w))
         .withColumn("t0", F.greatest(F.lit(round_start).cast("long"), F.col("next_vt")))
         .withColumn(
             "fetch_vt",
             (F.col("t0") + (F.col("rn") - F.lit(1)).cast("long") * F.col("delay_ms")),
         )
-        .withColumn("selected", F.col("fetch_vt") < F.lit(round_end))
+        .filter(F.col("fetch_vt") < F.lit(round_end))
+        .withColumn("selected", F.lit(True))
         .drop("t0", "next_vt")
     )
-    tail = (
-        pruned.withColumn("rn", F.lit(None).cast("int"))
-        .withColumn("fetch_vt", F.lit(None).cast("long"))
-        .withColumn("selected", F.lit(False))
-        .drop("next_vt")
-    )
-    return exact.unionByName(tail)
 
 
 def next_host_state(selected: DataFrame, host_state: DataFrame) -> DataFrame:

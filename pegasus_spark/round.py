@@ -9,7 +9,9 @@ becomes whole-stage codegen + bounded rounds (SURVEY.md §2 O16).
 Physical design notes (the 100 TB story):
 - exactly two data-sized shuffles per round: the per-host politeness
   window and the enqueue dedup aggregation; the robots gate is a
-  broadcast-side pandas UDF, the seen check is bloom-prefiltered,
+  broadcast-side pandas UDF, the seen check is one exact anti-join
+  (above its size gate a bloom probe first marks rows definitely-new,
+  which skips only their hash probe, not the exact side's shuffle),
   the fetch/decode re-shuffle is on the *salted* host_bucket;
 - the frontier is append-only (no rewrite churn): "pending" is
   recomputed as frontier ⟕̸ corpus (anti-join on url_hash) — on Iceberg
@@ -352,34 +354,30 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
     pending = pending.join(ctx.crawl_delays, "host", "left")
     host_state = ctx.cat.read("hosts")
 
+    obs_p = Observation()
     sched = politeness.schedule(
-        pending, host_state, round_start, round_end, cfg.min_delay_ms,
+        pending.observe(obs_p, F.count(F.lit(1)).alias("n")), host_state,
+        round_start, round_end, cfg.min_delay_ms,
         # stage-1 prune exists to bound a hot host's window partition at
         # 10^9+ pending rows; below the threshold the exact window alone
         # is cheaper (identical selection — politeness.schedule docstring)
         prune=ctx.approx_frontier_rows >= cfg.politeness_prune_min_rows,
     )
-    # Every consumer (fetch, extract, host clocks, each redirect hop)
-    # reads only the selected rows, so only those are materialized: one
-    # eager localCheckpoint roots the round-bounded selection
+    # The schedule returns only the selected rows, and every consumer
+    # (fetch, extract, host clocks, each redirect hop) reads only those:
+    # one eager localCheckpoint roots the round-bounded selection
     # (≤ hosts·budget rows, not the whole pending frontier) as a
     # LogicalRDD, so no consumer re-plans the frontier-scan → anti-join →
     # window subtree (re-embedded per bucket and per hop it grew to
     # O(B²·hops) plan nodes and OOMed a 4 GB driver on a 120-page bucketed
-    # crawl). The pending/selected counts ride that same job via
-    # observe(), so they are known before the branch fan-out — for the
-    # corpus-size truncation, and so an exhausted frontier exits before
-    # any write.
+    # crawl). The pending count (observed below the window) and the
+    # selected count ride that same job, so they are known before the
+    # branch fan-out — for the corpus-size truncation, and so an
+    # exhausted frontier exits before any write.
     obs_s = Observation()
-    root = sched.observe(
-        obs_s,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("selected").cast("long")).alias("n_sel"),
-    ).filter("selected").localCheckpoint(eager=True)
-    cs = _obs_get(obs_s, lambda: sched.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("selected").cast("long")).alias("n_sel")).collect()[0])
-    n_pending, n_sel = int(cs["n"]), int(cs["n_sel"] or 0)
+    root = sched.observe(obs_s, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    n_pending = int(_obs_get(obs_p, lambda: {"n": pending.count()})["n"])
+    n_sel = int(_obs_get(obs_s, lambda: {"n": root.count()})["n"])
     st_t.lap("schedule+counts")
     if n_pending == 0:
         free_checkpoint(root)

@@ -18,8 +18,9 @@ Replaces shriphani/pegasus's LMDB visited-cache (``src/pegasus/cache.clj``
   (executor-side).
 - ``probe``: candidates are co-grouped with their own bloom row by
   ``part_id`` (grouped-map ``applyInPandas`` over a cogroup) — rows the
-  bloom rejects are *definitely new* and skip the exact anti-join
-  entirely; only "maybe seen" rows pay the join.
+  bloom rejects are *definitely new*. They still pass through the exact
+  anti-join, whose exact side is shuffled or broadcast whole either way;
+  the ``maybe_seen`` condition only spares them its hash probe.
 
 Scale invariant (10^10 URLs, SURVEY.md §7.3; P = 2048 × 48 MB blooms =
 ~96 GB total state): **bloom bytes never touch the driver.** Probe and

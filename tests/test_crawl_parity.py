@@ -32,11 +32,14 @@ SCENARIOS = {
                        corpus_size=None, cfg_kw=dict(**_W3), sim_kw=dict(**_W3_SIM)),
     "corpus-cap": dict(params=WebParams(seed=9, n_pages=400, n_hosts=10, fanout=4.0, n_seeds=3),
                        corpus_size=120, cfg_kw=dict(**_W3), sim_kw=dict(**_W3_SIM)),
-    # the same crawl over the bucketed frontier/corpus layout: the layout
-    # is physical only, so the oracle sim is unchanged
+    # the same crawl over the bucketed frontier/corpus layout, with the
+    # politeness stage-1 prune forced on: layout and prune are physical
+    # only, so the oracle sim is unchanged
     "corpus-cap-bucketed": dict(params=WebParams(seed=9, n_pages=400, n_hosts=10, fanout=4.0,
                                                  n_seeds=3),
-                                corpus_size=120, cfg_kw=dict(table_bucket_count=4, **_W3),
+                                corpus_size=120,
+                                cfg_kw=dict(table_bucket_count=4, politeness_prune_min_rows=0,
+                                            **_W3),
                                 sim_kw=dict(**_W3_SIM)),
     "hot-host": dict(params=WebParams(seed=11, n_pages=300, n_hosts=8, zipf_s=2.5,
                                       fanout=3.0, n_seeds=4),

@@ -1,7 +1,9 @@
 """Virtual-time politeness schedule unit tests (SURVEY.md §2 O3)."""
 
+import re
+
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pegasus_spark import politeness
 
@@ -24,11 +26,11 @@ def test_budget_per_host_and_fifo_order(spark):
     out = politeness.schedule(
         _pending(spark, rows), _hosts(spark, []), 0, 8000, 2000
     ).toPandas().sort_values("rn")
-    # W/delay = 4 fetches fit: vt 0,2000,4000,6000
-    sel = out[out["selected"]]
-    assert list(sel["url_hash"]) == [0, 1, 2, 3]
-    assert list(sel["fetch_vt"]) == [0, 2000, 4000, 6000]
-    assert (~out[out["rn"] > 4]["selected"]).all()
+    # W/delay = 4 fetches fit: vt 0,2000,4000,6000; the other 6 are
+    # deferred and not returned
+    assert len(out) == 4 and out["selected"].all()
+    assert list(out["url_hash"]) == [0, 1, 2, 3]
+    assert list(out["fetch_vt"]) == [0, 2000, 4000, 6000]
 
 
 def test_crawl_delay_overrides_min_delay(spark):
@@ -46,8 +48,9 @@ def test_host_clock_defers_start(spark):
         _pending(spark, rows), _hosts(spark, [("a", 7000)]), 0, 8000, 2000
     ).toPandas().sort_values("rn")
     # t0 = max(0, 7000) → first at 7000 (fits), second at 9000 (deferred)
-    assert list(out["fetch_vt"]) == [7000, 9000]
-    assert list(out["selected"]) == [True, False]
+    assert list(out["url_hash"]) == [0]
+    assert list(out["fetch_vt"]) == [7000]
+    assert out["selected"].all()
 
 
 def test_priority_then_discovery_then_hash_ordering(spark):
@@ -73,27 +76,32 @@ def test_hosts_independent(spark):
         assert list(out[out["host"] == h].sort_values("rn")["fetch_vt"]) == [0, 2000, 4000]
 
 
-def test_two_stage_prune_matches_one_stage(spark):
-    """The salted pre-prune (politeness.py stage 1) must leave the
-    selected set, its rn/fetch_vt values, and the output row count
-    bit-identical to the one-stage spec. Hashes are laid out so MANY rows
-    collide per salt bucket (forcing real pruning at salt_buckets=4) on a
-    hot host, with a second cold host and a crawl-delayed third."""
-    rows = (
-        [(f"a{i}", i * 4, "a", i % 3, i % 2, None) for i in range(60)]  # hot: all salt-0
-        + [(f"b{i}", i * 4 + 1, "b", 0, 0, None) for i in range(3)]
-        + [(f"c{i}", i * 4 + 2, "c", 0, 0, 4000) for i in range(20)]
-    )
-    pending = _pending(spark, rows)
+# hashes laid out so MANY rows collide per salt bucket (forcing real
+# pruning at salt_buckets=4) on a hot host, with a second cold host and a
+# crawl-delayed third
+_PRUNE_ROWS = (
+    [(f"a{i}", i * 4, "a", i % 3, i % 2, None) for i in range(60)]  # hot: all salt-0
+    + [(f"b{i}", i * 4 + 1, "b", 0, 0, None) for i in range(3)]
+    + [(f"c{i}", i * 4 + 2, "c", 0, 0, 4000) for i in range(20)]
+)
+
+
+@pytest.mark.parametrize("prune", [True, False])
+def test_two_stage_prune_matches_one_stage(spark, prune):
+    """With or without the salted pre-prune (politeness.py stage 1) the
+    output is exactly the one-stage spec's selection: the same keys with
+    the same rn/fetch_vt, and no other rows."""
+    pending = _pending(spark, _PRUNE_ROWS)
     hosts = _hosts(spark, [("a", 3000)])
-    out = politeness.schedule(pending, hosts, 0, 8000, 2000, salt_buckets=4).toPandas()
-    assert len(out) == len(rows)  # every pending row present exactly once
+    if prune:  # stage 1 really drops rows here
+        cand = politeness._with_delay(pending, hosts, 2000)
+        assert politeness._prune_to_horizon(cand, 0, 8000, 4).count() < len(_PRUNE_ROWS)
+    out = politeness.schedule(pending, hosts, 0, 8000, 2000, salt_buckets=4,
+                              prune=prune).toPandas()
 
     # one-stage reference in pandas
-    import pandas as pd
-
-    ref = pd.DataFrame(rows, columns=["url", "url_hash", "host", "priority",
-                                      "discovered_round", "crawl_delay_ms"])
+    ref = pd.DataFrame(_PRUNE_ROWS, columns=["url", "url_hash", "host", "priority",
+                                             "discovered_round", "crawl_delay_ms"])
     next_vt = {"a": 3000}
     sel_ref = {}
     for host, g in ref.groupby("host"):
@@ -106,14 +114,24 @@ def test_two_stage_prune_matches_one_stage(spark):
             if vt < 8000:
                 sel_ref[int(r["url_hash"])] = (rn, vt)
 
-    sel = out[out["selected"]]
-    got = {int(r.url_hash): (int(r.rn), int(r.fetch_vt)) for r in sel.itertuples()}
+    assert out["selected"].all()
+    assert len(out) == len(sel_ref)
+    got = {int(r.url_hash): (int(r.rn), int(r.fetch_vt)) for r in out.itertuples()}
     assert got == sel_ref
-    # pruned tail: not selected, NULL schedule slots, rows preserved
-    tail = out[out["rn"].isna()]
-    assert len(tail) > 0  # pruning actually engaged at salt_buckets=4
-    assert not tail["selected"].any()
-    assert tail["fetch_vt"].isna().all()
+
+
+def test_pruned_schedule_plan_runs_each_stage_once(spark):
+    """The pruned schedule is one branch: the stage-1 salt window, the
+    exact per-host window and one host-clock join — nothing re-runs them
+    for rows that are not selected."""
+    sched = politeness.schedule(_pending(spark, _PRUNE_ROWS), _hosts(spark, [("a", 3000)]),
+                                0, 8000, 2000, salt_buckets=4, prune=True)
+    sched.collect()
+    # operator names of the executed (AQE final) physical plan
+    final = sched._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    ops = re.findall(r"(?m)^[\s:+\-]*(?:\*\(\d+\) )?(\w+)", final)
+    assert ops.count("Window") == 2, ops
+    assert sum(op.endswith("Join") for op in ops) == 1, ops
 
 
 def test_next_host_state_advances_only_fetched(spark):
