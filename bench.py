@@ -26,21 +26,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-QUERY_NAMES = [
-    "frontier_budget_rank", "politeness_vt_schedule", "frontier_antijoin_dedup",
-    "visited_topk_hosts", "metrics_rollup", "url_canonicalize",
-    "frontier_union_dedup", "seed_first_discovery",
-    "tpch_q1", "tpch_q3", "tpch_q6",
-    "text_quality", "doc_fingerprint", "dedup_exact", "langid",
-    "token_counts_by_source", "bpe_token_counts",
-    "ngram_jaccard_pairs", "minhash_lsh_pairs",
-    "embedding_cosine_topk", "embedding_near_dup_pairs",
-    "embedding_near_dup_lsh", "simhash_signatures", "simhash_near_dup_pairs",
-    "embedding_hamming_pairs", "phash_near_dup_pairs", "ann_lsh_bucket",
-    "ann_ivf_topk", "dedup_clusters", "dedup_clusters_star",
-]
-
-
 def _sf_of(sf_dir: str) -> float:
     import re
 
@@ -335,11 +320,12 @@ def query_bench(spark, sf_dir: str) -> dict:
     # the crawl into subprocesses), the first timed action otherwise
     # absorbs whole-stage-codegen JIT + Python-worker spin-up (~5-6 s
     # measured in BENCH_r04 on an UNCHANGED plan — VERDICT r4 wrong #1)
-    qs[QUERY_NAMES[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    first = next(iter(qs.values()))
+    first(spark, sf_dir).write.format("noop").mode("overwrite").save()
     times = {}
-    for name in QUERY_NAMES:
+    for name, q in qs.items():
         t0 = time.monotonic()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times[name] = round(time.monotonic() - t0, 3)
     return times
 

@@ -6,3 +6,7 @@ mapping), over Iceberg-style tables of image+caption payloads.
 """
 
 __version__ = "0.1.0"
+
+from pegasus_spark import worker as _worker
+
+_worker.install()
