@@ -66,12 +66,12 @@ class CrawlConfig:
     #   probe runs first. It does not shrink the anti-join's exact side,
     #   which is still shuffled or broadcast whole; it only spares the
     #   rows it marks definitely-new the hash probe.
-    # - politeness_prune_min_rows: below it, the two-stage politeness
-    #   window skips its stage-1 per-(host,salt) prune — one fewer
-    #   shuffle+sort per round; the prune exists to bound a HOT HOST's
-    #   window partition at 10^9+ pending rows, a regime a small
-    #   frontier cannot be in (selection/schedule provably identical,
-    #   politeness.schedule docstring).
+    # - politeness_prune_min_rows: below it, the politeness window runs
+    #   without its ``rn <= ⌈W/min_delay_ms⌉`` bound, so Spark plans no
+    #   map-side group limit and skips that per-map-task sort; the limit
+    #   exists to bound a HOT HOST's window shuffle at 10^9+ pending
+    #   rows, a regime a small frontier cannot be in (selection/schedule
+    #   provably identical, politeness.schedule docstring).
     bloom_probe_min_rows: int = 5_000_000
     politeness_prune_min_rows: int = 2_000_000
     # robots acquisition: "preparsed" reads the fixture's pre-fetched

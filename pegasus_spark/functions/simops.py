@@ -56,6 +56,25 @@ def _plane_matrix(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((dim, n_planes)).astype(np.float64)
 
 
+# The nested pandas UDFs below pickle by value, and these module-level
+# batch functions by reference: so a Python worker that unpickles a UDF
+# imports the package, which installs its zipimport guard (worker.py).
+def _bucket_ids(emb: pd.Series, planes: np.ndarray, weights: np.ndarray) -> pd.Series:
+    m = np.vstack(emb.to_numpy())  # (batch, dim)
+    bits = (m @ planes) > 0
+    return pd.Series(bits @ weights)
+
+
+def _sig64_frame(emb: pd.Series, signs: np.ndarray, weights_lo: np.ndarray) -> pd.DataFrame:
+    m = np.vstack(emb.to_numpy()).astype(np.float64)  # (batch, dim)
+    q = np.round(m * 1e6).astype(np.int64)
+    bits = (q @ signs.T) > 0  # (batch, 64) — exact int64 matmul
+    return pd.DataFrame({
+        "sig_lo": (bits[:, :32] @ weights_lo).astype(np.int64),
+        "sig_hi": (bits[:, 32:] @ weights_lo).astype(np.int64),
+    })
+
+
 def lsh_bucket_udf(dim: int, n_planes: int = 16, seed: int = 42):
     """Vectorized random-hyperplane bucket id: sign-bit pattern of the
     embedding projected on n_planes fixed planes → long bucket key."""
@@ -64,11 +83,20 @@ def lsh_bucket_udf(dim: int, n_planes: int = 16, seed: int = 42):
 
     @F.pandas_udf(LongType())
     def bucket(emb: pd.Series) -> pd.Series:
-        m = np.vstack(emb.to_numpy())  # (batch, dim)
-        bits = (m @ planes) > 0
-        return pd.Series(bits @ weights)
+        return _bucket_ids(emb, planes, weights)
 
     return bucket
+
+
+def _sig64_udf(dim: int):
+    signs = np.array(rademacher_signs(dim, 64), dtype=np.int64)  # (64, dim)
+    weights_lo = (1 << np.arange(32, dtype=np.uint64)).astype(np.int64)
+
+    @F.pandas_udf("sig_lo long, sig_hi long")
+    def sig64(emb: pd.Series) -> pd.DataFrame:
+        return _sig64_frame(emb, signs, weights_lo)
+
+    return sig64
 
 
 def rademacher_signs(dim: int, n_planes: int = 8) -> list[list[int]]:
@@ -190,21 +218,7 @@ def signed_projection_sig64_udf(df: DataFrame, dim: int,
     12 orders of magnitude inside int64. So the scale path and the
     oracle-checkable twin agree on every bit (pinned by
     test_sig64_udf_matches_jvm_form); use THIS one in hot paths."""
-    signs = np.array(rademacher_signs(dim, 64), dtype=np.int64)  # (64, dim)
-    weights_lo = (1 << np.arange(32, dtype=np.uint64)).astype(np.int64)
-
-    ret = "sig_lo long, sig_hi long"
-
-    @F.pandas_udf(ret)
-    def sig64(emb: pd.Series) -> pd.DataFrame:
-        m = np.vstack(emb.to_numpy()).astype(np.float64)  # (batch, dim)
-        q = np.round(m * 1e6).astype(np.int64)
-        bits = (q @ signs.T) > 0  # (batch, 64) — exact int64 matmul
-        return pd.DataFrame({
-            "sig_lo": (bits[:, :32] @ weights_lo).astype(np.int64),
-            "sig_hi": (bits[:, 32:] @ weights_lo).astype(np.int64),
-        })
-
+    sig64 = _sig64_udf(dim)
     return df.select(id_col, sig64(F.col(vec_col)).alias("_s")).select(
         id_col, F.col("_s.sig_lo").alias("sig_lo"), F.col("_s.sig_hi").alias("sig_hi")
     )

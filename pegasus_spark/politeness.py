@@ -21,74 +21,38 @@ reference — so our engine AND the parity oracle both implement the same
 Global fetch order = (fetch_vt, url_hash) — a total order both sides
 can compute.
 
-Physical shape — TWO-STAGE selection (the 10^10-frontier skew bound):
-a one-stage ``Window.partitionBy(host)`` sorts EVERY pending row of a
-host in one task; a host holding 10% of a 10^10-row frontier would push
-10^9 rows through one partition every round, forever (measured on the
-Zipf(2.0) fixture: 60.5% of the window shuffle in one partition —
-BENCH/skew_window.json r3). But only the first K = ⌈W/delay⌉ rows per
-host can possibly satisfy ``fetch_vt < round_end`` (t0 ≥ round_start ⇒
-rn−1 < W/delay), so:
-
-1. *pre-prune* per (host, salt=pmod(url_hash, S)): rank within each of
-   the S salt buckets by the same key and keep the first K — any row in
-   the host's global top-K is in its own bucket's top-K, so no
-   selectable row is ever pruned, and the hottest host's shuffle share
-   drops from its frontier share to ~1/S of it;
-2. run the *exact* per-host window on the survivors (≤ S·K rows per
-   host — budget-bounded, skew-free by construction). Its first K ranks
-   equal the one-stage ranks, so the selected set, fetch_vt values and
-   host-clock advancement are bit-identical to the one-stage spec.
+Physical shape — a map-side group limit (the 10^10-frontier skew bound):
+a plain ``Window.partitionBy(host)`` shuffles and sorts EVERY pending row
+of a host into one task; a host holding 10% of a 10^10-row frontier would
+push 10^9 rows through one partition every round, forever (measured on
+the Zipf(2.0) fixture: 60.5% of the window shuffle in one partition —
+BENCH/skew_window.json r3). But only the first K = ⌈W/min_delay_ms⌉ rows
+per host can satisfy ``fetch_vt < round_end``: t0 ≥ round_start and
+delay ≥ min_delay_ms, so fetch_vt < round_end implies rn ≤ K. The pruned
+schedule therefore adds ``rn <= K`` to the window's filter. That filter
+never changes the result; it changes the plan. Spark's
+``InferWindowGroupLimit`` turns it into a Partial ``WindowGroupLimit``
+below the host exchange (each map task keeps its first K rows per host
+in rank order) and a Final one above it, so rows past the horizon never
+leave their map task and a hot host ships at most K rows per map
+partition: one window, one shuffle. Spark applies the limit only while
+K ≤ ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000);
+above it the window runs unlimited, and ``schedule`` logs that on the
+``pegasus_spark`` logger. ``min_delay_ms = 0`` (no politeness floor)
+gives no bound, so the exact window then runs unpruned.
 
 The output is the selection alone, each row with its exact
 ``rn``/``fetch_vt``; deferred rows are not returned.
-``delay_ms = 0`` (no politeness floor) disables pruning for that host —
-every row is then selectable and goes through the exact window.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 _RANK_KEY = ("priority", "discovered_round", "url_hash")
-
-
-def _with_delay(pending: DataFrame, host_state: DataFrame, min_delay_ms: int) -> DataFrame:
-    """Join the host clock, resolve the effective per-host delay."""
-    cand = pending.join(host_state, "host", "left").withColumn(
-        "next_vt", F.coalesce(F.col("next_vt"), F.lit(0)).cast("long")
-    )
-    delay = F.greatest(
-        F.lit(min_delay_ms).cast("long"),
-        F.coalesce(F.col("crawl_delay_ms"), F.lit(0)).cast("long"),
-    )
-    return cand.withColumn("delay_ms", delay)
-
-
-def _prune_to_horizon(
-    cand: DataFrame, round_start: int, round_end: int, salt_buckets: int
-) -> DataFrame:
-    """Stage 1: per-(host, salt) partial top-K with K = ⌈W/delay⌉.
-
-    Returns the survivors: every row that could possibly be selected
-    this round. The rows it drops are provably past the horizon (their
-    bucket-local rank alone puts fetch_vt ≥ round_end).
-    """
-    W = round_end - round_start
-    # +1 margin makes any float-rounding of W/delay provably irrelevant
-    # (the true bound is rn ≤ ⌈W/delay⌉; one extra row per bucket is free)
-    cap = F.when(
-        F.col("delay_ms") > 0,
-        F.ceil(F.lit(float(W)) / F.col("delay_ms")).cast("long") + F.lit(1),
-    )  # NULL cap (delay 0) → every row selectable → no pruning
-    w1 = Window.partitionBy("host", "_salt").orderBy(*_RANK_KEY)
-    staged = (
-        cand.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int"))
-        .withColumn("_cap", cap)
-        .withColumn("_srn", F.row_number().over(w1))
-    )
-    keep = F.col("_cap").isNull() | (F.col("_srn") <= F.col("_cap"))
-    return staged.filter(keep).drop("_salt", "_cap", "_srn")
+log = logging.getLogger("pegasus_spark")
 
 
 def schedule(
@@ -97,7 +61,6 @@ def schedule(
     round_start: int,
     round_end: int,
     min_delay_ms: int,
-    salt_buckets: int = 32,
     prune: bool = True,
 ) -> DataFrame:
     """The round's selection: pending URLs with ``fetch_vt < round_end``,
@@ -109,19 +72,34 @@ def schedule(
     exact rn/fetch_vt; ``selected`` is always true (kept for callers
     that filter on it).
 
-    ``prune=False`` skips stage 1 and runs the exact per-host window on
-    EVERY pending row — the size-adaptive fast path for small frontiers,
-    where even the hottest host's full row set is one cheap task and the
-    salt window's extra shuffle+sort is pure overhead. The output is
-    identical either way (stage 1 never drops a selectable row).
+    ``prune=True`` adds the ``rn <= ⌈W/min_delay_ms⌉`` bound that Spark
+    plans as a map-side group limit (module docstring); ``prune=False``
+    runs the plain window, with no per-map-task sort. The output is
+    identical either way (the bound never drops a selectable row).
     """
-    cand = _with_delay(pending, host_state, min_delay_ms)
-    if prune:
-        cand = _prune_to_horizon(cand, round_start, round_end, salt_buckets)
+    delay = F.greatest(
+        F.lit(min_delay_ms).cast("long"),
+        F.coalesce(F.col("crawl_delay_ms"), F.lit(0)).cast("long"),
+    )
     w = Window.partitionBy("host").orderBy(*_RANK_KEY)
+    ranked = pending.withColumn("delay_ms", delay).withColumn("rn", F.row_number().over(w))
+    if prune and min_delay_ms > 0:
+        k = -(-(round_end - round_start) // min_delay_ms)
+        key = "spark.sql.optimizer.windowGroupLimitThreshold"
+        limit_max = int(pending.sparkSession.conf.get(key))
+        if k > limit_max:
+            log.debug("politeness horizon %d rows per host exceeds %s=%d; "
+                      "the host window runs without a map-side group limit",
+                      k, key, limit_max)
+        ranked = ranked.filter(F.col("rn") <= F.lit(k))
+    # the host clock only shifts t0, so it joins after the window: the
+    # host join sees the bounded rows, and a shuffle it needs cannot
+    # move a host's rows ahead of the group limit
+    t0 = F.greatest(F.lit(round_start).cast("long"),
+                    F.coalesce(F.col("next_vt"), F.lit(0)).cast("long"))
     return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .withColumn("t0", F.greatest(F.lit(round_start).cast("long"), F.col("next_vt")))
+        ranked.join(host_state, "host", "left")
+        .withColumn("t0", t0)
         .withColumn(
             "fetch_vt",
             (F.col("t0") + (F.col("rn") - F.lit(1)).cast("long") * F.col("delay_ms")),

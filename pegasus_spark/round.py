@@ -358,9 +358,9 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
     sched = politeness.schedule(
         pending.observe(obs_p, F.count(F.lit(1)).alias("n")), host_state,
         round_start, round_end, cfg.min_delay_ms,
-        # stage-1 prune exists to bound a hot host's window partition at
-        # 10^9+ pending rows; below the threshold the exact window alone
-        # is cheaper (identical selection — politeness.schedule docstring)
+        # the map-side group limit bounds a hot host's window shuffle at
+        # 10^9+ pending rows; below the threshold the plain window skips
+        # its per-map-task sort (identical selection — politeness.schedule)
         prune=ctx.approx_frontier_rows >= cfg.politeness_prune_min_rows,
     )
     # The schedule returns only the selected rows, and every consumer
@@ -465,43 +465,44 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         # skip it entirely
         mapping = mapping.localCheckpoint(eager=True)
 
-    # --- fetch + validate (salted by host_bucket) ---
-    # NOT persisted: its only consumer is the corpus append. Extraction
-    # reads out_links straight from the page store (below) — persisting
-    # payload-bearing rows would re-materialize GBs per round for a stage
-    # that needs one tiny column.
-    fetched = fetch_and_validate(
-        fetch_input, ctx.pages, cfg.host_buckets, cfg.validate_payloads,
-        selection_count=n_sel,
-        broadcast_max=cfg.fetch_broadcast_max,
-        has_lossy=ctx.has_lossy,
-        mapping=(mapping.select("url_hash", "final_hash", "final_url", "fetch_status")
-                 if mapping is not None else None),
-    )
-
-    # per-bucket lineage counts ride the corpus write via observe():
-    # no extra job for the per-partition metrics breakdown
-    obs = Observation(f"round-{r}")
-    bucket_aggs = [
-        F.sum(F.when(F.col("host_bucket") == i, 1).otherwise(0)).alias(f"b{i}")
-        for i in range(cfg.host_buckets)
-    ]
-    corpus_rows = fetched.observe(obs, *bucket_aggs).select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        "url", "url_hash", "host",
-        F.lit(r).cast("int").alias("fetch_round"),
-        "fetch_vt", "valid", "psnr", "final_url", "fetch_status",
-    )
-    if cfg.writer is not None:
-        # pegasus's :writer plug point (default-writer-fn override): the
-        # user stage transforms corpus rows before the append (e.g. a
-        # thumbnail-only corpus rewrites `bytes`). Contract: keep the
-        # corpus schema and row set — url_hash rows drive the visited
-        # bookkeeping (pending = frontier ⟕̸ corpus), so filtering rows
-        # here would cause refetches
-        corpus_rows = cfg.writer.apply(corpus_rows)
-
     def _do_corpus():
+        # fetch + validate (salted by host_bucket), planned in this thread
+        # so its driver-side analysis overlaps the other branches' jobs.
+        # NOT persisted: its only consumer is the corpus append. Extraction
+        # reads out_links straight from the page store (below) — persisting
+        # payload-bearing rows would re-materialize GBs per round for a stage
+        # that needs one tiny column.
+        fetched = fetch_and_validate(
+            fetch_input, ctx.pages, cfg.host_buckets, cfg.validate_payloads,
+            selection_count=n_sel,
+            broadcast_max=cfg.fetch_broadcast_max,
+            has_lossy=ctx.has_lossy,
+            mapping=(mapping.select("url_hash", "final_hash", "final_url", "fetch_status")
+                     if mapping is not None else None),
+        )
+
+        # per-bucket lineage counts ride the corpus write via observe():
+        # no extra job for the per-partition metrics breakdown
+        obs = Observation(f"round-{r}")
+        bucket_aggs = [
+            F.sum(F.when(F.col("host_bucket") == i, 1).otherwise(0)).alias(f"b{i}")
+            for i in range(cfg.host_buckets)
+        ]
+        corpus_rows = fetched.observe(obs, *bucket_aggs).select(
+            "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
+            "url", "url_hash", "host",
+            F.lit(r).cast("int").alias("fetch_round"),
+            "fetch_vt", "valid", "psnr", "final_url", "fetch_status",
+        )
+        if cfg.writer is not None:
+            # pegasus's :writer plug point (default-writer-fn override): the
+            # user stage transforms corpus rows before the append (e.g. a
+            # thumbnail-only corpus rewrites `bytes`). Contract: keep the
+            # corpus schema and row set — url_hash rows drive the visited
+            # bookkeeping (pending = frontier ⟕̸ corpus), so filtering rows
+            # here would cause refetches
+            corpus_rows = cfg.writer.apply(corpus_rows)
+
         ctx.cat.append("corpus", corpus_rows, options=cfg.corpus_write_options)
         return _obs_get(obs, lambda: {f"b{i}": 0 for i in range(cfg.host_buckets)})
 

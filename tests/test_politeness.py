@@ -1,5 +1,6 @@
 """Virtual-time politeness schedule unit tests (SURVEY.md §2 O3)."""
 
+import logging
 import re
 
 import pandas as pd
@@ -76,62 +77,131 @@ def test_hosts_independent(spark):
         assert list(out[out["host"] == h].sort_values("rn")["fetch_vt"]) == [0, 2000, 4000]
 
 
-# hashes laid out so MANY rows collide per salt bucket (forcing real
-# pruning at salt_buckets=4) on a hot host, with a second cold host and a
-# crawl-delayed third
+# a hot host with many more rows than fit a round (forcing real pruning
+# by the map-side group limit), a second cold host and a crawl-delayed third
 _PRUNE_ROWS = (
-    [(f"a{i}", i * 4, "a", i % 3, i % 2, None) for i in range(60)]  # hot: all salt-0
+    [(f"a{i}", i * 4, "a", i % 3, i % 2, None) for i in range(60)]
     + [(f"b{i}", i * 4 + 1, "b", 0, 0, None) for i in range(3)]
     + [(f"c{i}", i * 4 + 2, "c", 0, 0, 4000) for i in range(20)]
 )
 
 
-@pytest.mark.parametrize("prune", [True, False])
-def test_two_stage_prune_matches_one_stage(spark, prune):
-    """With or without the salted pre-prune (politeness.py stage 1) the
-    output is exactly the one-stage spec's selection: the same keys with
-    the same rn/fetch_vt, and no other rows."""
-    pending = _pending(spark, _PRUNE_ROWS)
-    hosts = _hosts(spark, [("a", 3000)])
-    if prune:  # stage 1 really drops rows here
-        cand = politeness._with_delay(pending, hosts, 2000)
-        assert politeness._prune_to_horizon(cand, 0, 8000, 4).count() < len(_PRUNE_ROWS)
-    out = politeness.schedule(pending, hosts, 0, 8000, 2000, salt_buckets=4,
-                              prune=prune).toPandas()
-
-    # one-stage reference in pandas
-    ref = pd.DataFrame(_PRUNE_ROWS, columns=["url", "url_hash", "host", "priority",
-                                             "discovered_round", "crawl_delay_ms"])
-    next_vt = {"a": 3000}
+def _reference(rows, next_vt, round_start, round_end, min_delay_ms):
+    """The one-stage spec in pandas: {url_hash: (rn, fetch_vt)} of the
+    selected rows."""
+    ref = pd.DataFrame(rows, columns=["url", "url_hash", "host", "priority",
+                                      "discovered_round", "crawl_delay_ms"])
     sel_ref = {}
     for host, g in ref.groupby("host"):
         g = g.sort_values(["priority", "discovered_round", "url_hash"])
         cd = g["crawl_delay_ms"].iloc[0]
-        d = max(2000, 0 if pd.isna(cd) else int(cd))
-        t0 = max(0, next_vt.get(host, 0))
+        d = max(min_delay_ms, 0 if pd.isna(cd) else int(cd))
+        t0 = max(round_start, next_vt.get(host, 0))
         for rn, (_, r) in enumerate(g.iterrows(), start=1):
             vt = t0 + (rn - 1) * d
-            if vt < 8000:
+            if vt < round_end:
                 sel_ref[int(r["url_hash"])] = (rn, vt)
+    return sel_ref
 
+
+def _assert_matches_reference(out, sel_ref):
     assert out["selected"].all()
     assert len(out) == len(sel_ref)
     got = {int(r.url_hash): (int(r.rn), int(r.fetch_vt)) for r in out.itertuples()}
     assert got == sel_ref
 
 
+def _plan_nodes(node, parents=()):
+    """(node, ancestors) over an executed physical plan, through AQE's
+    final plan and its query stages."""
+    yield node, parents
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+    for kid in kids:
+        yield from _plan_nodes(kid, parents + (node,))
+
+
+def _group_limits(df):
+    """{mode: (node, ancestors)} of the executed WindowGroupLimits."""
+    return {n.mode().toString(): (n, up)
+            for n, up in _plan_nodes(df._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "WindowGroupLimitExec"}
+
+
+@pytest.mark.parametrize("prune", [True, False])
+def test_two_stage_prune_matches_one_stage(spark, prune):
+    """With or without the map-side group limit (``prune``) the output is
+    exactly the one-stage spec's selection: the same keys with the same
+    rn/fetch_vt, and no other rows."""
+    pending = _pending(spark, _PRUNE_ROWS)
+    hosts = _hosts(spark, [("a", 3000)])
+    sched = politeness.schedule(pending, hosts, 0, 8000, 2000, prune=prune)
+    out = sched.toPandas()
+    limits = _group_limits(sched)
+    if prune:  # the Partial limit really drops rows in the map tasks
+        shipped = limits["Partial"][0].metrics().get("numOutputRows").get().value()
+        assert len(out) <= shipped < len(_PRUNE_ROWS), shipped
+    else:
+        assert limits == {}
+    _assert_matches_reference(out, _reference(_PRUNE_ROWS, {"a": 3000}, 0, 8000, 2000))
+
+
 def test_pruned_schedule_plan_runs_each_stage_once(spark):
-    """The pruned schedule is one branch: the stage-1 salt window, the
-    exact per-host window and one host-clock join — nothing re-runs them
-    for rows that are not selected."""
+    """The pruned schedule runs one window over one host shuffle: a
+    Partial group limit below the Exchange on host, a Final one above
+    it, and one host-clock join."""
     sched = politeness.schedule(_pending(spark, _PRUNE_ROWS), _hosts(spark, [("a", 3000)]),
-                                0, 8000, 2000, salt_buckets=4, prune=True)
+                                0, 8000, 2000, prune=True)
     sched.collect()
     # operator names of the executed (AQE final) physical plan
     final = sched._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     ops = re.findall(r"(?m)^[\s:+\-]*(?:\*\(\d+\) )?(\w+)", final)
-    assert ops.count("Window") == 2, ops
+    assert ops.count("Window") == 1, ops
+    assert ops.count("WindowGroupLimit") == 2, ops
     assert sum(op.endswith("Join") for op in ops) == 1, ops
+    limits = _group_limits(sched)
+    final_limit, above_final = limits["Final"]
+    partial, above_partial = limits["Partial"]
+    assert above_partial[:len(above_final) + 1] == above_final + (final_limit,)
+    host_exchanges = [n for n in above_partial[len(above_final):]
+                      if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+                      and n.outputPartitioning().toString().startswith("hashpartitioning(host")]
+    assert len(host_exchanges) == 1, final
+    assert final_limit.limit() == partial.limit() == 4  # ⌈8000 / 2000⌉
+
+
+def test_horizon_above_group_limit_threshold_is_logged(spark, caplog):
+    """K = ⌈2,000,000 / 1000⌉ = 2000 exceeds Spark's default
+    windowGroupLimitThreshold (1000): Spark plans no group limit, the
+    schedule says so on the ``pegasus_spark`` logger, and the selection
+    is still the spec's."""
+    assert int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold")) == 1000
+    with caplog.at_level(logging.DEBUG, logger="pegasus_spark"):
+        sched = politeness.schedule(_pending(spark, _PRUNE_ROWS), _hosts(spark, [("a", 3000)]),
+                                    0, 2_000_000, 1000, prune=True)
+    assert sum("map-side group limit" in r.getMessage() for r in caplog.records) == 1
+    out = sched.toPandas()
+    assert _group_limits(sched) == {}
+    _assert_matches_reference(out, _reference(_PRUNE_ROWS, {"a": 3000}, 0, 2_000_000, 1000))
+
+
+def test_zero_min_delay_runs_unpruned(spark, caplog):
+    """min_delay_ms=0 bounds no host, so the schedule plans no group
+    limit; the crawl-delayed host is still spaced by its own delay."""
+    with caplog.at_level(logging.DEBUG, logger="pegasus_spark"):
+        sched = politeness.schedule(_pending(spark, _PRUNE_ROWS), _hosts(spark, [("a", 3000)]),
+                                    0, 8000, 0, prune=True)
+    out = sched.toPandas()
+    assert not any("map-side group limit" in r.getMessage() for r in caplog.records)
+    assert _group_limits(sched) == {}
+    sel_ref = _reference(_PRUNE_ROWS, {"a": 3000}, 0, 8000, 0)
+    assert sorted(vt for h, (_, vt) in sel_ref.items() if h % 4 == 2) == [0, 4000]
+    _assert_matches_reference(out, sel_ref)
 
 
 def test_next_host_state_advances_only_fetched(spark):

@@ -199,3 +199,34 @@ def test_pyfiles_zip_is_guarded(tmp_path):
                          capture_output=True, text=True, timeout=120)
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "ok"
+
+
+@pytest.mark.parametrize("make_udf", ["lsh_bucket_udf", "_sig64_udf"])
+def test_simops_udf_imports_the_package_when_unpickled(spark, make_udf):
+    """The nested pandas UDFs of `functions/simops.py` pickle by value. A
+    Python worker that unpickles one, in a fresh interpreter, must import
+    `pegasus_spark`, whose import installs the guard in a task."""
+    from pyspark import cloudpickle
+
+    from pegasus_spark.functions import simops
+
+    fn = getattr(simops, make_udf)(8).func
+    blob = cloudpickle.dumps(fn)
+    script = textwrap.dedent(f"""
+        import pickle, sys
+        import numpy as np, pandas as pd
+        sys.path.insert(0, {REPO!r})
+        assert "pegasus_spark" not in sys.modules
+        fn = pickle.loads(sys.stdin.buffer.read())
+        assert "pegasus_spark" in sys.modules
+        emb = pd.Series([np.linspace(-1, 1, 8) * s for s in (1, -1, 0.5)])
+        print(pd.DataFrame(fn(emb)).to_json())
+    """)
+    out = subprocess.run([sys.executable, "-I", "-c", script], input=blob,
+                         capture_output=True, timeout=120)
+    assert out.returncode == 0, out.stderr.decode()
+    import numpy as np
+    import pandas as pd
+
+    emb = pd.Series([np.linspace(-1, 1, 8) * s for s in (1, -1, 0.5)])
+    assert out.stdout.decode().strip() == pd.DataFrame(fn(emb)).to_json()
