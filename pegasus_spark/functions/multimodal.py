@@ -89,29 +89,25 @@ def image_resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 def phash_near_dup_pairs(df: DataFrame, max_hamming: int = 6,
                          band_bits: int = 16) -> DataFrame:
-    """Image near-dup pairs by perceptual-hash Hamming distance, using the
-    same band-bucket-join pattern as simhash (no O(n²)): JVM-side only."""
-    n_bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    bands = df.select("image_id", "phash").select(
-        "image_id", "phash",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band_id"),
-                     F.shiftright("phash", b * band_bits).bitwiseAND(F.lit(mask))
-                     .alias("band_val"))
-            for b in range(n_bands)
-        ])).alias("band"),
-    ).select("image_id", "phash", "band.band_id", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    return (
-        a.join(b, ["band_id", "band_val"])
-        .where(F.col("a.image_id") < F.col("b.image_id"))
-        .select(F.col("a.image_id").alias("id_a"), F.col("b.image_id").alias("id_b"),
-                ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    """Image near-dup pairs by perceptual-hash Hamming distance: the 64-bit
+    ``phash`` split into its two 32-bit halves and fed to the banded
+    self-join simhash uses (``simops._band_pairs_2x32``; no O(n²)),
+    JVM-side only. Pairs must share an exact ``band_bits`` band, so every
+    pair within ``max_hamming`` is found only while
+    ``max_hamming < 64 // band_bits``; the defaults (6 within 4 bands)
+    return the pairs within 6 that share a band.
+    Output: (id_a, id_b, hamming int)."""
+    from .simops import _band_pairs_2x32
+
+    mask32 = F.lit(0xFFFFFFFF).cast("long")
+    halves = df.select(
+        "image_id",
+        F.col("phash").bitwiseAND(mask32).alias("lo"),
+        F.shiftright("phash", 32).bitwiseAND(mask32).alias("hi"),
     )
+    return _band_pairs_2x32(
+        halves, "image_id", "lo", "hi", max_hamming, band_bits
+    ).withColumn("hamming", F.col("hamming").cast("int"))
 
 
 # ---- audio: WAV/PCM (stdlib wave — no external codec needed) -----------

@@ -144,20 +144,6 @@ def langid_heuristic(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array column (built-ins only:
-    split → transform over a sequence → array_distinct)."""
-    toks = tokens(col)
-    sz = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(sz - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array(F.concat_ws(" ", toks))))
-
-
 def _md5_int(col: Column) -> Column:
     """First 8 hex digits of md5 as a long — a 32-bit hash both Spark and
     DuckDB compute identically (the cross-engine-stable hash used for
@@ -173,10 +159,9 @@ def exploded_shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3,
 
     Physical shape: posexplode tokens → window ``lead`` per doc → concat →
     md5 — every expression whole-stage-codegen'd, one shuffle (the per-doc
-    window). The array-building alternative (``shingles()``:
-    sequence+transform+element_at HOFs) runs interpreted and measured 30×
-    slower on the same data. Semantics match ``shingles()`` pre-distinct:
-    docs shorter than n tokens contribute their whole token string;
+    window). An array-building form (sequence+transform+element_at HOFs
+    per doc) runs interpreted and measured 30× slower on the same data.
+    Docs shorter than n tokens contribute their whole token string;
     callers needing set semantics dedupe on (id, h)."""
     passthrough = passthrough or []
     toks = tokens(F.col(text_col))

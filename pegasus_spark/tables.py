@@ -308,11 +308,6 @@ class ManifestCatalog:
         d = self._write_local(name, table)
         return self._commit(name, self._next_manifest(m, m["dirs"] + [d]))
 
-    def overwrite_local(self, name: str, table: "pa.Table") -> int:
-        m = self._manifest(name)
-        d = self._write_local(name, table)
-        return self._commit(name, self._next_manifest(m, [d]))
-
     # ---- compaction (Iceberg rewrite_data_files analogue) ----------
     def compact(self, name: str, target_dirs: int = 8) -> int:
         """Bin-packing compaction: merge the SMALLEST commit dirs so the

@@ -89,26 +89,36 @@ def test_simhash_near_dup(spark, docs):
     # band_bits=4 → 16 bands: a pair within hamming 15 is GUARANTEED to
     # share a band (pigeonhole), so the near-dup (0,2) must be found
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in
-             simops.simhash_near_dup_pairs(docs, max_hamming=15, band_bits=4).collect()}
+             simops.simhash_md5_near_dup_pairs(
+                 docs, max_hamming=15, band_bits=4).collect()}
     assert pairs[(0, 1)] == 0  # identical text → identical simhash
     assert (0, 2) in pairs  # near-dup within hamming budget
 
 
-def test_cosine_topk_and_lsh(spark):
-    rng = np.random.default_rng(3)
-    vecs = rng.standard_normal((200, 16)).astype(np.float32)
-    vecs[7] = vecs[0] + rng.standard_normal(16).astype(np.float32) * 0.01  # near dup of 0
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(200)],
-        "vec_id long, embedding array<float>",
-    )
-    q = [float(x) for x in vecs[0]]
-    top = simops.cosine_topk(df, q, k=3).collect()
-    assert top[0]["vec_id"] == 0 and top[0]["cos"] == 1.0
-    assert top[1]["vec_id"] == 7  # the planted near-dup
-    # LSH bucket search finds the planted near-dup too (same bucket w.h.p.)
-    lsh = simops.lsh_bucket_topk(df, q, k=3, n_planes=4).collect()
-    assert lsh[0]["vec_id"] == 0
+def _sig_df(spark, sigs):
+    return spark.createDataFrame(
+        [(i, s & 0xFFFFFFFF, (s >> 32) & 0xFFFFFFFF) for i, s in enumerate(sigs)],
+        "id long, lo long, hi long")
+
+
+def test_band_join_rejects_bands_straddling_the_halves(spark):
+    # 12-bit bands: 64 // 12 = 5 would pass the pigeonhole check at
+    # max_hamming=4, but only 2 bands fit in each 32-bit half
+    df = _sig_df(spark, [0, 1])
+    with pytest.raises(ValueError, match="divide 32"):
+        simops.hamming_band_pairs_2x32(df, "id", "lo", "hi", max_hamming=4,
+                                       band_bits=12)
+
+
+def test_band_join_finds_one_differing_bit_per_wide_band(spark):
+    # bits 0, 12, 32, 44: one in each of the four 12-bit bands cut inside
+    # the halves, so no such band is shared; 8-bit bands leave four shared
+    a = 0x0123456789ABCDEF
+    b = a ^ (1 << 0) ^ (1 << 12) ^ (1 << 32) ^ (1 << 44)
+    got = [tuple(r) for r in simops.hamming_band_pairs_2x32(
+        _sig_df(spark, [a, b]), "id", "lo", "hi", max_hamming=4,
+        band_bits=8).collect()]
+    assert got == [(0, 1, 4)]
 
 
 def test_bpe_token_count_matches_reference_pretokenizer(spark):
@@ -269,6 +279,43 @@ def test_image_resize(spark, images):
     for r in out:
         px = codec.png_decode(r["bytes"])
         assert px.shape == (8, 8, 3)
+
+
+def _signed(x):
+    return x - (1 << 64) if x >= 1 << 63 else x
+
+
+@pytest.fixture(scope="module")
+def phashes(spark):
+    """Random signed 64-bit phashes (negatives included) plus planted
+    near-duplicates at Hamming distance 0-15."""
+    rng = np.random.default_rng(21)
+    base = [int(x) for x in rng.integers(0, 1 << 64, size=120, dtype=np.uint64)]
+    hashes = list(base)
+    for i in range(40):
+        flips = rng.choice(64, size=int(rng.integers(0, 16)), replace=False)
+        h = base[i]
+        for f in flips:
+            h ^= 1 << int(f)
+        hashes.append(h)
+    hashes = [_signed(h) for h in hashes]
+    assert any(h < 0 for h in hashes)
+    rows = [(f"img-{i:03d}", h) for i, h in enumerate(hashes)]
+    return spark.createDataFrame(rows, "image_id string, phash long"), rows
+
+
+@pytest.mark.parametrize("band_bits,max_hamming", [(16, 3), (8, 7), (4, 15)])
+def test_phash_near_dup_matches_all_pairs(spark, phashes, band_bits, max_hamming):
+    df, rows = phashes
+    out = multimodal.phash_near_dup_pairs(df, max_hamming=max_hamming,
+                                          band_bits=band_bits)
+    assert out.schema.simpleString() == \
+        "struct<id_a:string,id_b:string,hamming:int>"
+    dist = {(a, b): bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
+            for a, ha in rows for b, hb in rows if a < b}
+    expected = {(a, b, d) for (a, b), d in dist.items() if d <= max_hamming}
+    assert len(expected) >= 10
+    assert {tuple(r) for r in out.collect()} == expected
 
 
 def test_phash_near_dup(spark, images):

@@ -201,10 +201,10 @@ def test_pyfiles_zip_is_guarded(tmp_path):
     assert out.stdout.strip() == "ok"
 
 
-@pytest.mark.parametrize("make_udf", ["lsh_bucket_udf", "_sig64_udf"])
+@pytest.mark.parametrize("make_udf", ["_sig64_udf"])
 def test_simops_udf_imports_the_package_when_unpickled(spark, make_udf):
-    """The nested pandas UDFs of `functions/simops.py` pickle by value. A
-    Python worker that unpickles one, in a fresh interpreter, must import
+    """The nested pandas UDF of `functions/simops.py` pickles by value. A
+    Python worker that unpickles it, in a fresh interpreter, must import
     `pegasus_spark`, whose import installs the guard in a task."""
     from pyspark import cloudpickle
 
