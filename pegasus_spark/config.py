@@ -108,10 +108,11 @@ class CrawlConfig:
         "parquet.block.size": str(16 * 1024 * 1024),
         "parquet.enable.dictionary": "false",
     })
-    # table_bucket_count>0 creates frontier+corpus bucket-partitioned
-    # (Iceberg bucket(B, url_hash) transform analogue — see
-    # tables.bucketwise_join; a resume keeps the B the tables were created
-    # with) and runs the pending anti-join bucket-wise — the
+    # table_bucket_count>0 creates frontier+corpus as Spark-bucketed
+    # tables (Iceberg bucket(B, url_hash) transform analogue —
+    # tables.ManifestCatalog; a resume keeps the B the tables were
+    # created with), so the pending anti-join runs as a bucketed join
+    # with no exchange once the visited keys outgrow a broadcast — the
     # zero-data-shuffle dedup shape for 10^10-row frontiers.
     table_bucket_count: int = 0
     # incremental catalog compaction (Iceberg rewrite_data_files

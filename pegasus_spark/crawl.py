@@ -80,9 +80,9 @@ def _make_ctx(spark: SparkSession, cfg: CrawlConfig) -> tuple[RoundContext, Chec
         spark.conf.set("spark.sql.maxPlanStringLength", "200000")
     cat = ManifestCatalog(spark, cfg.job_dir)
     # Iceberg bucket(B, url_hash) partition-transform analogue on the two
-    # data-sized tables: every append lands directory-per-bucket, and the
-    # pending anti-join runs bucket-wise (round.py) — create() is
-    # idempotent, so on resume the spec comes from the existing manifest
+    # data-sized tables: every append lands as Spark bucket files, so the
+    # pending anti-join can run as a bucketed join (round.py) — create()
+    # is idempotent, so on resume the spec comes from the existing manifest
     tb = (("url_hash", cfg.table_bucket_count)
           if cfg.table_bucket_count > 0 else None)
     cat.create("frontier", FRONTIER_DDL, bucket_by=tb)

@@ -95,7 +95,10 @@ def phash_near_dup_pairs(df: DataFrame, max_hamming: int = 6,
     JVM-side only. Pairs must share an exact ``band_bits`` band, so every
     pair within ``max_hamming`` is found only while
     ``max_hamming < 64 // band_bits``; the defaults (6 within 4 bands)
-    return the pairs within 6 that share a band.
+    return the pairs within 6 that share a band, and drop e.g. a pair at
+    distance 4 whose flips hit bits 0, 16, 32 and 48. The oracle bands
+    the same way, so oracle parity cannot show this recall limit;
+    ``band_bits=8`` finds every pair within 6.
     Output: (id_a, id_b, hamming int)."""
     from .simops import _band_pairs_2x32
 

@@ -14,8 +14,9 @@ Physical design notes (the 100 TB story):
   which skips only their hash probe, not the exact side's shuffle),
   the fetch/decode re-shuffle is on the *salted* host_bucket;
 - the frontier is append-only (no rewrite churn): "pending" is
-  recomputed as frontier ⟕̸ corpus (anti-join on url_hash) — on Iceberg
-  both sides are bucketed by url_hash so this is a co-partitioned join;
+  recomputed as frontier ⟕̸ corpus (anti-join on url_hash) — with
+  ``table_bucket_count`` both sides are Spark-bucketed by url_hash, so
+  past broadcast size this is an exchange-free co-partitioned join;
 - metrics are appended per round with a per-bucket breakdown
   (per-partition lineage + metrics per the north rule).
 """
@@ -36,7 +37,7 @@ from .config import CrawlConfig
 from .fetch import broadcast_selection, fetch_and_validate
 from .lineage import _obs_get, free_checkpoint
 from .seen import SeenSet
-from .tables import ManifestCatalog, bucket_of, bucketwise_join
+from .tables import ManifestCatalog
 
 FRONTIER_DDL = (
     "url string, url_hash long, host string, priority int, "
@@ -314,40 +315,11 @@ def _run_round_inner(ctx: RoundContext, r: int, visited_total: int) -> dict:
         # this round's rows into its own dedup
         visited_hashes = visited_hashes.unionByName(
             ctx.cat.read("redirects").select("url_hash"))
-    spec = ctx.cat.bucket_spec("frontier")
-    # SPJ size gate (same counter as the bloom/prune gates): the
-    # bucket-wise anti-join exists so that at 10^10 rows NEITHER
-    # data-sized table is hash-shuffled or globally broadcast — but its
-    # per-round fixed cost (B frontier bucket relations + B visited
-    # slice scans + B broadcast builds, ~2× the plain plan's driver/
-    # scheduling latency at bench scale) buys nothing while the visited
-    # key column is itself a trivial broadcast. Below the threshold the
-    # pending join therefore runs in the PLAIN shape over the bucketed
-    # files (cat.read is layout-transparent); above it the bucket-wise
-    # SPJ form takes over. Identical rows either way; the SPJ plan
-    # shape itself stays pinned by
-    # test_bucketed.py::test_bucketed_crawl_equivalence (which forces
-    # the gate with bloom_probe_min_rows=0).
-    if spec is not None and ctx.approx_frontier_rows >= cfg.bloom_probe_min_rows:
-        # frontier and corpus share the bucket(B, url_hash) layout, so
-        # each visited slice (1/B of the visited set, key column only)
-        # broadcasts into its matching frontier bucket scan. B is the
-        # tables' own (create() keeps the spec a crawl started with), not
-        # the config's: a resume under another table_bucket_count must
-        # still cover every frontier bucket.
-        nb = spec[1]
-
-        def visited_b(b):
-            v_b = ctx.cat.read_bucket("corpus", b).select("url_hash")
-            if has_redirects:
-                v_b = v_b.unionByName(ctx.cat.read("redirects").select("url_hash")
-                                      .where(bucket_of("url_hash", nb) == b))
-            return v_b
-
-        pending = bucketwise_join(nb, lambda b: ctx.cat.read_bucket("frontier", b),
-                                  visited_b, "url_hash", "left_anti")
-    else:
-        pending = ctx.cat.read("frontier").join(visited_hashes, "url_hash", "left_anti")
+    # one plan on every layout: on bucket(B, url_hash) tables (frontier
+    # and corpus keep the B they were created with) Spark broadcasts the
+    # visited keys while they are small and runs an exchange-free
+    # bucketed sort-merge join once they are not (tables.ManifestCatalog.read)
+    pending = ctx.cat.read("frontier").join(visited_hashes, "url_hash", "left_anti")
     # no broadcast hint on the delays side: Catalyst auto-broadcasts
     # while the robots table is under the threshold and shuffle-joins
     # past it (10^8 hosts) — same policy as the rules gate

@@ -35,12 +35,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from .hashing import bloom_indexes
 from .lineage import _obs_get
-from .tables import ManifestCatalog, bucket_of
+from .tables import ManifestCatalog
 
 BLOOM_DDL = "part_id int, m_bits long, bloom binary, n_items long, overflow binary"
 
@@ -60,6 +60,11 @@ def _bloom_state(bloom_pdf: pd.DataFrame, m_default: int) -> tuple[int, np.ndarr
                if len(r["overflow"]) else np.empty(0, dtype=np.int64))
         return m_bits, bits, ovf, int(r["n_items"])
     return m_default, np.zeros(m_default // 8, dtype=np.uint8), np.empty(0, dtype=np.int64), 0
+
+
+def bucket_of(col: str, n: int) -> Column:
+    """A hash's bloom partition: ``pmod(col, n)``. A NULL key has none."""
+    return F.pmod(F.col(col), F.lit(n)).cast("int")
 
 
 class SeenSet:

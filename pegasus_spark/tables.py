@@ -19,10 +19,13 @@ to ``append``/``restore``. Data dirs are written by Spark executors in
 parallel (the manifest only lists directories), so nothing here funnels
 rows through the driver — it scales to 10^10-row tables; the manifest
 grows by one path per commit, not per file.
+Bucketed tables (``create(bucket_by=...)``) are Spark bucketed tables,
+so Spark joins two of them on the bucket column with no exchange.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import threading
@@ -32,37 +35,32 @@ from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# the manifest property that marks a bucketed table's commit dirs as
+# Spark bucket files; a bucketed manifest without it holds the older
+# ``_bucket=<b>`` directory partitions
+BUCKET_LAYOUT = "spark-bucketBy"
+# registered snapshots kept per table (a DataFrame read from an older one
+# can no longer be planned): a round's reads, and its seen-set rebuild,
+# which may read the version the round's append just staged
+KEEP_REGISTERED = 2
 
 
-def bucket_of(col: str | Column, n: int) -> Column:
-    """The ``bucket(n, col)`` layout: a row's bucket is ``pmod(col, n)``.
-    Every bucket assignment and bucket slice goes through here, so a
-    bucketed table and the slices joined against it always agree. A NULL
-    key has no bucket."""
-    return F.pmod(F.col(col) if isinstance(col, str) else col, F.lit(n)).cast("int")
-
-
-def bucketwise_join(n: int, big, small, key: str, how: str) -> DataFrame:
-    """Bucket-wise join over a ``bucket(n, key)`` layout — the sandbox
-    analogue of an Iceberg storage-partitioned join (SPJ): the union over
-    ``b < n`` of ``big(b).join(F.broadcast(small(b)), key, how)``, where
-    ``big(b)``/``small(b)`` return bucket ``b``'s rows of each side.
-
-    The big side is never shuffled or globally broadcast: each small
-    slice (1/n of its side) broadcasts into only its matching bucket of
-    the big side. At the 10^10 design point (n=1024) a slice is ~10^7
-    keys, a bounded build side, and the data-sized side moves zero
-    times. Rows with a NULL key belong to no bucket; callers that must
-    keep them route them around the join."""
-    return reduce(DataFrame.unionByName,
-                  (big(b).join(F.broadcast(small(b)), key, how) for b in range(n)))
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 class ManifestCatalog:
+    # session-catalog tables over bucketed snapshots, oldest first, per
+    # (Spark application, catalog root, table) — shared by every instance
+    _registered: dict[tuple[str, str, str], list[str]] = {}
+    _register_lock = threading.Lock()
+
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._app = spark.sparkContext.applicationId
         os.makedirs(root, exist_ok=True)
         # multi-table transaction state: staged {table → version} whose
         # manifest files are on disk but whose CURRENT pointers haven't
@@ -87,11 +85,11 @@ class ManifestCatalog:
         """Create an empty table (version 0). Idempotent.
 
         ``bucket_by=(col, B)`` is the Iceberg ``bucket(B, col)`` partition
-        transform analogue: every write hash-distributes rows into B
-        directory partitions (``_bucket=<bucket_of(col, B)>``), recorded in
-        the manifest as a table property. Two tables bucketed the same way
-        join bucket-by-bucket with no data-sized shuffle (Iceberg's
-        storage-partitioned join) — see ``bucketwise_join``.
+        transform analogue: every write lands as Spark ``bucketBy(B, col)``
+        files, recorded in the manifest as table properties (``bucket_by``,
+        ``bucket_layout``). Two tables bucketed the same way join with no
+        data-sized shuffle (Iceberg's storage-partitioned join) — see
+        ``read``.
 
         ``write_options`` are per-table writer defaults (Iceberg
         per-table write properties analogue, e.g. parquet.block.size for
@@ -107,10 +105,19 @@ class ManifestCatalog:
         self._commit(name, {"version": 0, "schema_ddl": schema_ddl, "dirs": [],
                             "parent": None,
                             "bucket_by": list(bucket_by) if bucket_by else None,
+                            "bucket_layout": BUCKET_LAYOUT if bucket_by else None,
                             "write_options": dict(write_options) if write_options else None})
 
-    def bucket_spec(self, name: str) -> tuple[str, int] | None:
-        b = self._manifest(name).get("bucket_by")
+    @staticmethod
+    def _bucket_by(name: str, m: dict) -> tuple[str, int] | None:
+        """The manifest's ``(col, B)``, or None if the table is not
+        bucketed. A manifest in the older ``_bucket=<b>`` directory
+        layout raises: read as Spark bucket files it would be misread."""
+        b = m.get("bucket_by")
+        if b and m.get("bucket_layout") != BUCKET_LAYOUT:
+            raise ValueError(
+                f"table {name!r} is in the `_bucket=<b>` directory layout, which this "
+                "version no longer reads or writes; crawl into a new job_dir")
         return (b[0], int(b[1])) if b else None
 
     def exists(self, name: str) -> bool:
@@ -183,55 +190,60 @@ class ManifestCatalog:
 
     # ---- I/O -------------------------------------------------------
     def read(self, name: str, version: int | None = None) -> DataFrame:
-        """Current (or time-travel) snapshot, logical schema only — the
-        ``_bucket`` partition column of bucketed tables is stripped, so
-        readers are layout-agnostic.
+        """Current (or time-travel) snapshot, logical schema only.
 
-        Bucketed tables are read as ONE flat multi-path relation over
-        the per-bucket LEAF directories (which hold plain files —
-        ``partitionBy`` strips the partition column): a multi-root read
-        of the commit dirs themselves trips partition discovery
-        (CONFLICTING_DIRECTORY_STRUCTURES), and a per-commit union costs
-        one plan branch per commit on every read (it was the main
-        residual per-round overhead of the bucketed crawl layout)."""
+        A bucketed snapshot is read through its session-catalog table
+        (``_register``), so Spark knows the scan is bucketed. The
+        always-true ``_commit`` partition filter makes Spark size the scan
+        from its files; without it a catalog table with no statistics is
+        sized at ``spark.sql.defaultSizeInBytes`` and is never broadcast."""
         m = self._manifest(name, version)
-        if not m.get("bucket_by"):
+        spec = self._bucket_by(name, m)
+        if spec is None or not m["dirs"]:
             return self._scan(m, m["dirs"])
-        return self._scan(m, [os.path.join(d, leaf)
-                              for d in self._commit_dirs(name, m)
-                              for leaf in sorted(os.listdir(d))
-                              if leaf.startswith("_bucket=")])
+        return (self.spark.table(self._register(name, m, spec))
+                .where(F.col("_commit") >= 0).drop("_commit"))
 
-    def read_bucket(self, name: str, bucket: int,
-                    version: int | None = None) -> DataFrame:
-        """ONE bucket's rows across all commits, as a SINGLE relation —
-        the big side of ``bucketwise_join``.
-
-        Listing just this bucket's leaf directories keeps a B-way
-        bucket-wise join at O(B) plan nodes, independent of round count;
-        filtering a per-commit union on ``_bucket`` instead embeds the
-        R-commit union in every one of the B branches — O(B·R) plan
-        nodes, which OOMed a 1 GB driver at B=8, R≈10 during plan
-        analysis. (A real Iceberg catalog gets this for free — one scan
-        node, manifest-pruned.)"""
-        m = self._manifest(name, version)
-        if not m.get("bucket_by"):
-            raise ValueError(f"{name} is not bucketed")
-        return self._scan(m, [p for d in self._commit_dirs(name, m)
-                              if os.path.isdir(p := os.path.join(d, f"_bucket={bucket}"))])
-
-    @staticmethod
-    def _commit_dirs(name: str, m: dict) -> list[str]:
-        """A bucketed manifest's commit dirs, each checked on disk: a
-        missing one is a lost commit and must not read as fewer rows
-        (an absent LEAF ``_bucket=b`` dir is just an empty bucket)."""
-        for d in m["dirs"]:
+    def _register(self, name: str, m: dict, spec: tuple[str, int]) -> str:
+        """The session-catalog table of one bucketed snapshot: an external
+        table ``CLUSTERED BY (col) INTO B BUCKETS`` with a ``_commit=i``
+        partition per commit dir, named by the snapshot's content so it is
+        registered once. Only the ``KEEP_REGISTERED`` newest per table
+        stay; dropping one removes metadata only."""
+        dirs = m["dirs"]
+        for d in dirs:
+            # a lost commit must not read as fewer rows (registering it
+            # as a partition would even recreate it empty)
             if not os.path.isdir(d):
                 raise FileNotFoundError(f"table {name!r} commit dir {d!r} is missing")
-        return m["dirs"]
+        tname = "pegasus_" + hashlib.sha1(json.dumps(
+            [self.root, name, m["schema_ddl"], spec, dirs]).encode()).hexdigest()[:24]
+        with self._register_lock:
+            live = self._registered.setdefault((self._app, self.root, name), [])
+            if tname in live:
+                live.remove(tname)
+            else:
+                loc = os.path.join(self._tdir(name), "_catalog")  # stays empty
+                os.makedirs(loc, exist_ok=True)
+                self.spark.sql(
+                    f"CREATE TABLE IF NOT EXISTS {tname} ({m['schema_ddl']}, _commit int) "
+                    f"USING parquet PARTITIONED BY (_commit) CLUSTERED BY ({spec[0]}) "
+                    f"INTO {spec[1]} BUCKETS LOCATION {_sql_str(loc)}")
+                self.spark.sql(f"ALTER TABLE {tname} ADD IF NOT EXISTS " + " ".join(
+                    f"PARTITION (_commit={i}) LOCATION {_sql_str(d)}"
+                    for i, d in enumerate(dirs)))
+            live.append(tname)
+            while len(live) > KEEP_REGISTERED:
+                self._drop_table(live.pop(0))
+        return tname
+
+    def _drop_table(self, tname: str) -> None:
+        # the session catalog's own drop: unlike DROP TABLE it does not
+        # uncache persisted DataFrames that read the table
+        ident = self.spark._jvm.org.apache.spark.sql.catalyst.TableIdentifier.apply(tname)
+        self.spark._jsparkSession.sessionState().catalog().dropTable(ident, True, False)
 
     def _scan(self, m: dict, dirs: list[str]) -> DataFrame:
-        # leaf dirs hold plain files, so a multi-root read is safe
         if not dirs:
             # an empty read must be empty to the OPTIMIZER: limit(0)
             # folds to an empty LocalRelation, so it runs no task and
@@ -245,22 +257,26 @@ class ManifestCatalog:
                     options: dict[str, str] | None = None) -> str:
         d = os.path.join(self._tdir(name), "data", uuid.uuid4().hex)
         m = self._manifest(name)
-        spec = m.get("bucket_by")
-        if spec:
-            col, nb = spec[0], int(spec[1])
-            if "_bucket" not in df.columns:
-                df = df.withColumn("_bucket", bucket_of(col, nb))
-            # cluster rows so each task writes whole buckets (~1 file per
-            # bucket per commit — Iceberg's write.distribution-mode=hash)
-            w = df.repartition(nb, "_bucket").write.mode("errorifexists").partitionBy("_bucket")
-        else:
-            w = df.write.mode("errorifexists")
+        spec = self._bucket_by(name, m)
+        # the repartition hashes rows the way bucketBy does, so each task
+        # writes one whole bucket (~1 file per bucket per commit —
+        # Iceberg's write.distribution-mode=hash)
+        w = (df.repartition(spec[1], spec[0]) if spec else df).write.mode("errorifexists")
         # table-property defaults first, per-call options override per key
         merged = dict(m.get("write_options") or {})
         merged.update(options or {})
         for k, v in merged.items():
             w = w.option(k, v)
-        w.parquet(d)
+        if spec is None:
+            w.parquet(d)
+            return d
+        # Spark writes bucket files only through a catalog table: write an
+        # external one at d, then drop its entry so only the files remain
+        tmp = f"pegasus_write_{uuid.uuid4().hex}"
+        try:
+            w.format("parquet").bucketBy(spec[1], spec[0]).option("path", d).saveAsTable(tmp)
+        finally:
+            self._drop_table(tmp)
         return d
 
     def append(self, name: str, df: DataFrame,
@@ -282,11 +298,12 @@ class ManifestCatalog:
     @staticmethod
     def _next_manifest(m: dict, dirs: list[str]) -> dict:
         """Successor manifest: bumps version, carries table PROPERTIES
-        (bucket_by, write_options — Iceberg table metadata survives
-        every commit)."""
+        (bucket_by, bucket_layout, write_options — Iceberg table
+        metadata survives every commit)."""
         return {"version": m["version"] + 1, "schema_ddl": m["schema_ddl"],
                 "dirs": dirs, "parent": m["version"],
                 "bucket_by": m.get("bucket_by"),
+                "bucket_layout": m.get("bucket_layout"),
                 "write_options": m.get("write_options")}
 
     # ---- driver-local commits (no Spark job) -------------------------
@@ -296,8 +313,8 @@ class ManifestCatalog:
     # same parquet, the manifest commit is identical.
     def _write_local(self, name: str, table: "pa.Table") -> str:
         if self._manifest(name).get("bucket_by"):
-            raise ValueError(f"{name} is bucketed; local commits would "
-                             "break the directory-per-bucket layout")
+            raise ValueError(f"{name} is bucketed; a local commit would "
+                             "not be in Spark's bucket file layout")
         d = os.path.join(self._tdir(name), "data", uuid.uuid4().hex)
         os.makedirs(d)
         pq.write_table(table, os.path.join(d, "part-00000.parquet"))
@@ -314,8 +331,8 @@ class ManifestCatalog:
         current snapshot references at most ``target_dirs`` dirs.
 
         Append-only tables gain one dir per commit; every read lists all
-        of them and bucketed reads probe B leaf dirs per commit — at the
-        10^4-round design point that is 10^4 dirs per round, forever.
+        of them — at the 10^4-round design point that is 10^4 dirs per
+        round, forever.
         Iceberg bounds this with incremental file compaction; this is
         the manifest-catalog analogue. Incremental on purpose: only the
         smallest dirs (typically many tiny per-round appends) are
@@ -345,19 +362,8 @@ class ManifestCatalog:
         # lands exactly at target_dirs
         merge = by_size[: len(dirs) - target_dirs + 1]
         keep = [d for d in dirs if d not in set(merge)]
-        spec = m.get("bucket_by")
-        if spec:
-            # leaf-dir read per bucket keeps this a flat multi-path scan;
-            # _write_data re-derives _bucket from the key column, which
-            # is pmod-identical to the original placement
-            parts = []
-            for d in merge:
-                sub = self.spark.read.schema(
-                    m["schema_ddl"] + ", _bucket int").parquet(d)
-                parts.append(sub.drop("_bucket"))
-        else:
-            parts = [self.spark.read.schema(m["schema_ddl"]).parquet(d)
-                     for d in merge]
+        # bucket files are plain parquet; _write_data re-buckets the rows
+        parts = [self.spark.read.schema(m["schema_ddl"]).parquet(d) for d in merge]
         newdir = self._write_data(name, reduce(DataFrame.unionByName, parts))
         return self._commit(name, self._next_manifest(m, keep + [newdir]))
 

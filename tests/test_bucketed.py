@@ -1,13 +1,17 @@
-"""Bucket-partitioned layout (Iceberg bucket(B, url_hash) analogue).
+"""Bucketed layout (Iceberg bucket(B, url_hash) analogue).
 
-Covers VERDICT r3 'missing #2': the catalog's bucket_by table property,
-directory-per-bucket writes, per-bucket reads, the SPJ-shaped
-bucket-wise join helper, and full-crawl equivalence between the default
-and fully-bucketed engines.
+Covers the catalog's bucket_by table property, Spark-native bucket file
+writes, the bucketed read that Spark plans joins over without an
+exchange, and full-crawl equivalence between the default and
+fully-bucketed engines.
 """
 
+import glob
+import os
+import re
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,14 +19,40 @@ from pyspark.sql import functions as F
 from pegasus_spark.config import CrawlConfig
 from pegasus_spark.crawl import crawl
 from pegasus_spark.fixtures import WebParams, generate_web, write_web
-from pegasus_spark.tables import ManifestCatalog, bucket_of, bucketwise_join
+from pegasus_spark.tables import ManifestCatalog
 
 
-def _explain(df) -> str:
-    jdf = df._jdf
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return jdf.queryExecution().explainString(mode)
+def _hashed(spark, lo, hi, name="v"):
+    return spark.range(lo, hi).select(
+        F.xxhash64("id").alias("url_hash"), F.col("id").cast("int").alias(name))
+
+
+def assert_bucket_files(spark, commit_dir, n):
+    """Every parquet file of a commit dir is a Spark bucket file (bucket
+    id in its name) whose rows all hash to that bucket, the way
+    ``bucketBy(n, "url_hash")`` places them."""
+    files = glob.glob(os.path.join(commit_dir, "*.parquet"))
+    assert files
+    for f in files:
+        b = int(re.search(r"_(\d+)\.c\d+\.", os.path.basename(f)).group(1))
+        assert 0 <= b < n
+        wrong = spark.read.parquet(f).where(F.pmod(F.hash("url_hash"), F.lit(n)) != b)
+        assert wrong.count() == 0, f
+
+
+@contextmanager
+def no_broadcast(spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bucketed_table_roundtrip(spark):
@@ -30,66 +60,86 @@ def test_bucketed_table_roundtrip(spark):
     try:
         cat = ManifestCatalog(spark, tmp)
         cat.create("t", "url_hash bigint, v int", bucket_by=("url_hash", 4))
-        assert cat.bucket_spec("t") == ("url_hash", 4)
-        df1 = spark.range(0, 100).select(
-            F.xxhash64("id").alias("url_hash"), F.col("id").cast("int").alias("v"))
-        df2 = spark.range(100, 150).select(
-            F.xxhash64("id").alias("url_hash"), F.col("id").cast("int").alias("v"))
-        cat.append("t", df1)
-        cat.append("t", df2)
+        m = cat._manifest("t")
+        assert (m["bucket_by"], m["bucket_layout"]) == (["url_hash", 4], "spark-bucketBy")
+        cat.append("t", _hashed(spark, 0, 100))
+        cat.append("t", _hashed(spark, 100, 150))
 
         # logical read: layout-transparent, exact rows
         got = cat.read("t")
         assert got.columns == ["url_hash", "v"]
         assert sorted(r["v"] for r in got.collect()) == list(range(150))
-
-        # physical read: every row of bucket b has pmod(url_hash, 4) == b,
-        # and a bucket read scans only that bucket's leaf directories
-        for b in range(4):
-            rb = cat.read_bucket("t", b)
-            assert rb.where(F.pmod("url_hash", F.lit(4)) != b).count() == 0
-            assert all(f"/_bucket={b}/" in f for f in rb.inputFiles())
-        assert sum(cat.read_bucket("t", b).count() for b in range(4)) == 150
+        # physical: each commit dir holds Spark bucket files only
+        for d in cat._manifest("t")["dirs"]:
+            assert_bucket_files(spark, d, 4)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 @pytest.mark.parametrize("how", ["inner", "left_anti"])
-def test_bucketwise_join_matches_plain_join(spark, how):
-    """bucketwise_join in the pending/extract shape — the big side read
-    per bucket from a bucketed table, the small side sliced by bucket_of
-    — returns the plain join's rows, and plans with ZERO hash-shuffle
-    exchanges. A NULL key on the small side belongs to no bucket and
-    matches nothing, as in the plain join."""
+def test_bucketed_join_matches_plain_join(spark, how):
+    """A join of two bucketed tables on their bucket column returns the
+    plain join's rows, both broadcast and, with broadcast off, as a
+    bucketed sort-merge join with no exchange. A NULL key matches
+    nothing, as in the plain join."""
     tmp = tempfile.mkdtemp()
     try:
         cat = ManifestCatalog(spark, tmp)
         cat.create("t", "url_hash bigint, v int", bucket_by=("url_hash", 4))
+        cat.create("s", "url_hash bigint, w int", bucket_by=("url_hash", 4))
         for lo in (0, 60):
-            cat.append("t", spark.range(lo, lo + 60).select(
-                F.xxhash64("id").alias("url_hash"), F.col("id").cast("int").alias("v")))
-        small = spark.range(40, 160).select(
-            F.xxhash64("id").alias("url_hash"), F.col("id").cast("int").alias("w")
-        ).unionByName(spark.createDataFrame([(None, -1)], "url_hash bigint, w int"))
+            cat.append("t", _hashed(spark, lo, lo + 60))
+        cat.append("s", _hashed(spark, 40, 160, "w").unionByName(
+            spark.createDataFrame([(None, -1)], "url_hash bigint, w int")))
+        plain = (spark.read.parquet(*cat._manifest("t")["dirs"])
+                 .join(spark.read.parquet(*cat._manifest("s")["dirs"]), "url_hash", how))
+        want = sorted(map(tuple, plain.collect()))
+        assert len(want) == (80 if how == "inner" else 40)
 
-        out = bucketwise_join(4, lambda b: cat.read_bucket("t", b),
-                              lambda b: small.where(bucket_of("url_hash", 4) == b),
-                              "url_hash", how)
-        plain = cat.read("t").join(small, "url_hash", how)
-        assert sorted(map(tuple, out.collect())) == sorted(map(tuple, plain.collect()))
-        assert out.count() == (80 if how == "inner" else 40)
-        plan = _explain(out)
-        assert "Exchange hashpartitioning" not in plan
-        assert "BroadcastExchange" in plan
+        out = cat.read("t").join(cat.read("s"), "url_hash", how)
+        assert sorted(map(tuple, out.collect())) == want
+        assert "BroadcastHashJoin" in _executed_plan(out)
+        with no_broadcast(spark):
+            out = cat.read("t").join(cat.read("s"), "url_hash", how)
+            plan = _executed_plan(out)
+            assert sorted(map(tuple, out.collect())) == want
+        assert "SortMergeJoin" in plan and "Exchange" not in plan, plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_pending_join_plan_is_bucketed_at_any_b(spark):
+    """The round's pending anti-join over bucketed frontier/corpus tables,
+    with broadcast off: no exchange below the join, and one scan node per
+    table whatever B is."""
+    scans = {}
+    for nb in (4, 64):
+        tmp = tempfile.mkdtemp()
+        try:
+            cat = ManifestCatalog(spark, tmp)
+            cat.create("frontier", "url_hash bigint, v int", bucket_by=("url_hash", nb))
+            cat.create("corpus", "url_hash bigint, w int", bucket_by=("url_hash", nb))
+            for lo in (0, 100):
+                cat.append("frontier", _hashed(spark, lo, lo + 100))
+                cat.append("corpus", _hashed(spark, lo, lo + 90, "w"))
+            with no_broadcast(spark):
+                pending = cat.read("frontier").join(
+                    cat.read("corpus").select("url_hash"), "url_hash", "left_anti")
+                plan = _executed_plan(pending)
+                assert pending.count() == 20
+            assert "Exchange" not in plan, plan
+            scans[nb] = plan.count("FileScan")
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    assert scans[4] == scans[64] == 2
+
+
 def test_bucketed_crawl_equivalence(spark):
-    """Full crawl with the bucketed frontier/corpus tables, the
-    bucket-wise pending anti-join and the shuffle fetch/extract joins
-    (broadcast gate forced off) produces the exact corpus, frontier and
-    metrics of the default engine."""
+    """Full crawl with the bucketed frontier/corpus tables, broadcast off
+    (so the pending anti-join runs as the bucketed sort-merge join) and
+    the politeness prune and shuffle fetch/extract joins forced on,
+    produces the exact corpus, frontier and metrics of the default
+    engine."""
     tmp = tempfile.mkdtemp()
     try:
         web = generate_web(WebParams(seed=77, n_pages=150, n_hosts=6,
@@ -114,14 +164,9 @@ def test_bucketed_crawl_equivalence(spark):
             return corpus, frontier, metrics
 
         base = run("job_default")
-        # bloom_probe_min_rows=0 forces every size-gated plan onto its
-        # big-data shape (bucket-wise SPJ pending anti-join, bloom probe
-        # + per-round merge) so the production plan forms stay exercised
-        # end to end on a tiny fixture — r6's size gates otherwise pick
-        # the small-data shapes here
-        bucketed = run("job_bucketed", table_bucket_count=4,
-                       fetch_broadcast_max=0, bloom_probe_min_rows=0,
-                       politeness_prune_min_rows=0)
+        with no_broadcast(spark):
+            bucketed = run("job_bucketed", table_bucket_count=4,
+                           fetch_broadcast_max=0, politeness_prune_min_rows=0)
         assert bucketed[0] == base[0]
         assert bucketed[1] == base[1]
         assert bucketed[2] == base[2]

@@ -17,6 +17,7 @@ from pegasus_spark.config import CrawlConfig
 from pegasus_spark.crawl import crawl
 from pegasus_spark.fixtures import WebParams, generate_web, write_web
 from pegasus_spark.tables import ManifestCatalog
+from tests.test_bucketed import assert_bucket_files
 
 
 def test_compact_preserves_rows_and_bounds_dirs(spark):
@@ -59,16 +60,13 @@ def test_compact_bucketed_keeps_layout(spark):
         cat.compact("t", target_dirs=2)
         m = cat._manifest("t")
         assert len(m["dirs"]) == 2 and m["bucket_by"] == ["url_hash", 4]
+        assert m["bucket_layout"] == "spark-bucketBy"
 
-        # logical read: exact rows
+        # logical read: exact rows over the compacted + kept dirs
         assert sorted(r["v"] for r in cat.read("t").collect()) == list(range(120))
-        # physical: every row of bucket b still has pmod(url_hash, 4) == b
-        for b in range(4):
-            assert cat.read_bucket("t", b).where(
-                F.pmod("url_hash", F.lit(4)) != b).count() == 0
-        # per-bucket reads see the union of compacted + kept dirs
-        total = sum(cat.read_bucket("t", b).count() for b in range(4))
-        assert total == 120
+        # physical: the merged dir is written as Spark bucket files too
+        for d in m["dirs"]:
+            assert_bucket_files(spark, d, 4)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

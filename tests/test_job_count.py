@@ -26,10 +26,10 @@ from pegasus_spark.fixtures import WebParams, generate_web, write_web
 # end (~18/round: AQE materializes each shuffle stage as its own
 # sub-job, so one logical action fans into several job ids; setup
 # probes + final stop check included). Empty table reads submit none
-# (tables.ManifestCatalog._scan); with them it was 150. The ~10% slack
-# absorbs AQE plan wobble; one extra count()/collect() per round adds
-# at least 8 jobs and, with its AQE sub-jobs, trips the bound.
-MAX_JOBS_TOTAL = 160
+# (tables.ManifestCatalog._scan); with them it was 150. The count was
+# the same in every run measured, so the pin is the count itself: one
+# extra count()/collect() per round adds at least 8 jobs and trips it.
+MAX_JOBS_TOTAL = 145
 
 
 def _max_job_id(spark) -> int:
@@ -42,8 +42,8 @@ def _max_job_id(spark) -> int:
 # frontier/corpus + compaction firing mid-crawl): each compaction pass
 # adds a handful of rewrite jobs. Measured on 4 cores at
 # round_width_vt=24000 (8 rounds): 164 (169 before empty reads stopped
-# submitting jobs), plus the same ~10% slack.
-MAX_JOBS_TOTAL_BUCKETED = 181
+# submitting jobs); pinned at the count, as above.
+MAX_JOBS_TOTAL_BUCKETED = 164
 PRODUCTION_LAYOUT = dict(table_bucket_count=4, compact_every=4, compact_target_dirs=4)
 
 

@@ -79,14 +79,13 @@ def test_crash_mid_crawl_resume_identical(spark, web_dir):
 
 
 def test_resume_with_other_table_bucket_count(spark, web_dir):
-    """The bucket-wise pending join takes B from the tables, not the
-    config: a crawl started at table_bucket_count=4, crashed after round
-    1's commits and resumed at table_bucket_count=2 (the tables keep B=4)
-    must still see every pending row and match an uninterrupted B=4
-    crawl. bloom_probe_min_rows=0 forces the bucket-wise plan."""
+    """B comes from the tables, not the config: a crawl started at
+    table_bucket_count=4, crashed after round 1's commits and resumed at
+    table_bucket_count=2 (the tables keep B=4) must still see every
+    pending row and match an uninterrupted B=4 crawl."""
     tmp = tempfile.mkdtemp()
     try:
-        kw = dict(web_dir=web_dir, corpus_size=60, seen_parts=4, bloom_probe_min_rows=0)
+        kw = dict(web_dir=web_dir, corpus_size=60, seen_parts=4)
         res_a = crawl(spark, CrawlConfig(job_dir=f"{tmp}/job_a", table_bucket_count=4, **kw))
 
         def killer(r, v, ex):
@@ -100,7 +99,8 @@ def test_resume_with_other_table_bucket_count(spark, web_dir):
         assert CheckpointStore(f"{tmp}/job_b").latest()["round"] == 0
         res_b = crawl(spark, CrawlConfig(job_dir=f"{tmp}/job_b", table_bucket_count=2, **kw),
                       resume=True)
-        assert ManifestCatalog(spark, f"{tmp}/job_b").bucket_spec("frontier") == ("url_hash", 4)
+        assert ManifestCatalog(spark, f"{tmp}/job_b")._manifest("frontier")["bucket_by"] \
+            == ["url_hash", 4]
         assert (res_b.stop_reason, res_b.visited) == (res_a.stop_reason, res_a.visited)
 
         key = ["fetch_round", "fetch_vt", "url_hash"]

@@ -24,26 +24,57 @@ def _max_job_id(spark) -> int:
 
 
 def test_empty_reads_run_no_job(spark, cat):
-    """A never-written table, and a bucket slice with no rows, read as a
-    relation the optimizer knows is empty: collecting it submits no Spark
-    job, its plan holds no (Python) RDD scan, and a join against it is
-    pruned at plan time."""
+    """A never-written table, plain or bucketed, reads as a relation the
+    optimizer knows is empty: collecting it submits no Spark job, its
+    plan holds no (Python) RDD scan, and a join against it is pruned at
+    plan time."""
     cat.create("t", "a long, b string")
     cat.create("u", "url_hash long", bucket_by=("url_hash", 4))
-    cat.create("w", "url_hash long", bucket_by=("url_hash", 4))
-    cat.append("w", spark.range(20).selectExpr("id * 4 as url_hash"))  # all in bucket 0
-    assert cat.read_bucket("w", 0).count() == 20
-    reads = [cat.read("t"), cat.read("u"), cat.read_bucket("u", 2), cat.read_bucket("w", 3)]
-    for df in reads:
+    for df in (cat.read("t"), cat.read("u")):
         before = _max_job_id(spark)
         assert df.collect() == []
         assert _max_job_id(spark) == before
         assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
     big = spark.range(10).selectExpr("id as url_hash")
     for how in ("inner", "left_anti"):
-        plan = big.join(cat.read_bucket("w", 3), "url_hash", how) \
+        plan = big.join(cat.read("u"), "url_hash", how) \
             ._jdf.queryExecution().optimizedPlan().toString()
         assert "Join" not in plan
+
+
+def test_bucketed_read_over_many_commits_runs_no_job(spark, cat):
+    """Building and planning the read of a B=8 table over 10 commits
+    submits no Spark job: the read lists one dir per commit, under
+    Spark's parallel-listing threshold of 32 paths."""
+    cat.create("t", "url_hash long", bucket_by=("url_hash", 8))
+    for i in range(10):
+        cat.append("t", spark.range(i * 50, (i + 1) * 50).selectExpr("xxhash64(id) as url_hash"))
+    before = _max_job_id(spark)
+    cat.read("t")._jdf.queryExecution().executedPlan()
+    assert _max_job_id(spark) == before
+    assert cat.read("t").count() == 500
+
+
+def test_old_bucket_layout_raises(spark, cat):
+    """A bucketed manifest written in the older ``_bucket=<b>`` directory
+    layout (no ``bucket_layout`` property) is refused by name, on read
+    and on write, instead of being read as Spark bucket files."""
+    import json
+    import os
+
+    cat.create("t", "a long", bucket_by=("a", 4))
+    d = os.path.join(cat._tdir("t"), "data", "old")
+    spark.range(8).selectExpr("id as a", "cast(pmod(id, 4) as int) as _bucket") \
+        .write.partitionBy("_bucket").parquet(d)
+    m = cat._manifest("t")
+    del m["bucket_layout"]
+    cat._commit("t", dict(m, version=1, dirs=[d], parent=0))
+    assert any(leaf.startswith("_bucket=") for leaf in os.listdir(d))
+    with pytest.raises(ValueError, match="_bucket=<b>"):
+        cat.read("t")
+    with pytest.raises(ValueError, match="_bucket=<b>"):
+        cat.append("t", spark.range(2).selectExpr("id as a"))
+    assert json.load(open(cat._mpath("t", 1)))["dirs"] == [d]
 
 
 def test_append_versions_and_time_travel(spark, cat):
@@ -174,29 +205,19 @@ def test_table_write_options_survive_compaction(spark, cat, tmp_path):
 
 def test_bucketed_read_missing_commit_dir_raises(spark, cat):
     """A commit dir listed in a bucketed table's manifest but gone from
-    disk is a lost commit: read() must fail, not return fewer rows. Absent
-    leaf _bucket=b dirs (empty buckets) stay legitimate."""
+    disk is a lost commit: read() must fail, not return fewer rows (nor
+    register it as a partition, which would recreate it empty). A commit
+    with no rows in some buckets, or none at all, stays legitimate."""
+    import os
     import shutil
 
     cat.create("t", "a long", bucket_by=("a", 4))
     cat.append("t", spark.range(8).selectExpr("id as a"))
     cat.append("t", spark.range(8, 9).selectExpr("id as a"))  # one bucket
+    cat.append("t", spark.range(0).selectExpr("id as a"))  # no rows
     assert cat.read("t").count() == 9
-    shutil.rmtree(cat._manifest("t")["dirs"][0])
+    lost = cat._manifest("t")["dirs"][0]
+    shutil.rmtree(lost)
     with pytest.raises(FileNotFoundError, match="missing"):
         cat.read("t")
-
-
-def test_read_bucket_missing_commit_dir_raises(spark, cat):
-    """read_bucket is as loud as read(): a lost commit dir raises even for
-    a bucket the remaining commits do not hold, while a commit with no
-    _bucket=b leaf (an empty bucket) reads as zero rows."""
-    import shutil
-
-    cat.create("t", "a long", bucket_by=("a", 4))
-    cat.append("t", spark.range(8).selectExpr("id as a"))
-    cat.append("t", spark.range(8, 9).selectExpr("id as a"))  # bucket 0 only
-    assert [cat.read_bucket("t", b).count() for b in range(4)] == [3, 2, 2, 2]
-    shutil.rmtree(cat._manifest("t")["dirs"][0])
-    with pytest.raises(FileNotFoundError, match="missing"):
-        cat.read_bucket("t", 1)
+    assert not os.path.exists(lost)
