@@ -367,24 +367,23 @@ def q_embedding_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_phash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image-phash near-dup operator (multimodal.phash_near_dup_pairs
-    — the banded Hamming join over the phash's two 32-bit halves)
-    value-checked cross-engine. The query test data carries no images,
-    so the 64-bit phash stand-in is derived deterministically from the
-    documents' md5-twin simhash halves (sim_hi<<32 | sim_lo) —
-    locality-preserving, so near-dup texts land at small Hamming
-    distance and the exact banding/verify machinery the image path uses
-    is exercised end to end (VERDICT r4 missing #2: this was the last
-    near-dup family without an oracle)."""
-    from pegasus_spark.functions.multimodal import phash_near_dup_pairs
-    from pegasus_spark.functions.simops import simhash_md5
+    """The image-phash near-dup operator (simops.phash_near_dup_pairs —
+    the banded Hamming join over the phash's two 32-bit halves, 8 bands
+    of 8 bits at max_hamming=6) value-checked cross-engine against an
+    all-pairs oracle, so the check covers recall too. The query test
+    data carries no images, so the 64-bit phash stand-in is derived
+    deterministically from the documents' md5-twin simhash halves
+    (sim_hi<<32 | sim_lo) — locality-preserving, so near-dup texts land
+    at small Hamming distance and the exact banding/verify machinery the
+    image path uses is exercised end to end."""
+    from pegasus_spark.functions.simops import phash_near_dup_pairs, simhash_md5
 
     d = _t(spark, sf_dir, "documents")
     sigs = simhash_md5(d).select(
         F.col("doc_id").alias("image_id"),
         F.shiftleft("sim_hi", 32).bitwiseOR(F.col("sim_lo")).alias("phash"),
     ).localCheckpoint(eager=True)
-    return phash_near_dup_pairs(sigs, max_hamming=6, band_bits=16)
+    return phash_near_dup_pairs(sigs, max_hamming=6)
 
 
 _NEAR_DUP_LSH_PLANES = 4  # 16 buckets over the testdata's 500 vectors
@@ -973,10 +972,9 @@ def _phash_near_dup_oracle() -> str:
     """DuckDB twin of q_phash_near_dup_pairs: the same md5-twin simhash
     halves combined into ONE 64-bit long (two's-complement wrap via a
     HUGEINT intermediate — DuckDB's BIGINT << raises on overflow where
-    Spark's shiftleft wraps), then a single-long band split + bit_count
-    verify: the same 4 bands of 16 bits that multimodal.phash_near_dup_pairs
-    cuts from the two 32-bit halves ((x>>s)&mask is shift-flavor-agnostic
-    since s+16 ≤ 64)."""
+    Spark's shiftleft wraps), then an all-pairs self-join verified by
+    bit_count — no banding, so it pins every pair within 6, not only
+    those that share a band."""
     return f"""
         WITH {_simhash_cte()},
         ph AS (
@@ -985,17 +983,11 @@ def _phash_near_dup_oracle() -> str:
                            THEN x - 18446744073709551616 ELSE x END AS BIGINT) AS phash
           FROM (SELECT doc_id,
                        CAST(sim_hi AS HUGEINT) * 4294967296 + sim_lo AS x
-                FROM sg)),
-        bands AS (
-          SELECT doc_id, phash, t.b AS band_id,
-                 (phash >> (CAST(t.b AS INT) * 16)) & 65535 AS band_val
-          FROM ph CROSS JOIN range(4) t(b))
-        SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
+                FROM sg))
+        SELECT a.doc_id AS id_a, c.doc_id AS id_b,
                CAST(bit_count(xor(a.phash, c.phash)) AS BIGINT) AS hamming
-        FROM bands a JOIN bands c
-          ON a.band_id = c.band_id AND a.band_val = c.band_val
-         AND a.doc_id < c.doc_id
-        WHERE CAST(bit_count(xor(a.phash, c.phash)) AS BIGINT) <= 6
+        FROM ph a JOIN ph c ON a.doc_id < c.doc_id
+        WHERE bit_count(xor(a.phash, c.phash)) <= 6
     """
 
 

@@ -1,8 +1,8 @@
 """Graph operators for the dedup pipeline: connected components over a
 near-dup pair graph, and canonical-representative selection.
 
-Pair generators (minhash/simhash/phash/embedding banding in simops,
-textops, multimodal) emit EDGES; a training-data dedup pipeline needs
+Pair generators (minhash banding in textops, simhash/phash/embedding
+banding in simops) emit EDGES; a training-data dedup pipeline needs
 the CLUSTERS those edges imply and one kept representative per cluster
 (the rest are dropped as duplicates). This module closes that gap.
 

@@ -1,4 +1,5 @@
-"""Similarity operators over embeddings (array<float>) and text signatures.
+"""Similarity operators over embeddings (array<float>), text signatures
+and image perceptual hashes.
 
 Each operator here is run by an oracle-checked ``__spark_entry__`` query
 and value-checked against a DuckDB twin, except
@@ -17,9 +18,10 @@ against.
 - ``simhash_md5``: 64-bit SimHash of text from md5 token halves, emitted
   as two 32-bit longs.
 - ``hamming_band_pairs_2x32``: the banded-Hamming self-join over such
-  two-halves signatures, run by ``simhash_md5_near_dup_pairs`` and the
-  embedding Hamming query; ``multimodal.phash_near_dup_pairs`` runs the
-  same join without its pigeonhole check (``_band_pairs_2x32``).
+  two-halves signatures, run by ``simhash_md5_near_dup_pairs``,
+  ``phash_near_dup_pairs`` and the embedding Hamming query.
+- ``phash_near_dup_pairs``: image near-dup pairs by the Hamming distance
+  of a 64-bit perceptual hash, through the same band join.
 - ``ivf_topk``: inverted-file ANN top-k over sampled centroid cells.
 """
 
@@ -296,26 +298,18 @@ def hamming_band_pairs_2x32(sigs: DataFrame, id_col: str,
     JVM ``bit_count`` — never all-pairs. Pigeonhole guarantee (a pair
     within Hamming < #bands shares ≥1 exact band) requires
     ``max_hamming < 64 // band_bits``, enforced here, so the output is
-    exactly the pairs within ``max_hamming``. Output: (id_a, id_b, hamming)."""
+    exactly the pairs within ``max_hamming``. Bands never straddle the
+    two halves, so ``band_bits`` must divide 32.
+    Output: (id_a, id_b, hamming)."""
+    if band_bits <= 0 or 32 % band_bits:
+        raise ValueError(f"band_bits={band_bits} must divide 32: the bands "
+                         "are cut inside the two 32-bit halves")
     n_bands = 64 // band_bits
     if max_hamming >= n_bands:
         raise ValueError(
             f"max_hamming={max_hamming} needs > {max_hamming} bands for the "
             f"pigeonhole guarantee; band_bits={band_bits} gives only {n_bands}"
         )
-    return _band_pairs_2x32(sigs, id_col, lo_col, hi_col, max_hamming, band_bits)
-
-
-def _band_pairs_2x32(sigs: DataFrame, id_col: str, lo_col: str, hi_col: str,
-                    max_hamming: int, band_bits: int) -> DataFrame:
-    """The join of ``hamming_band_pairs_2x32`` without its pigeonhole
-    check: pairs within ``max_hamming`` that share at least one exact band.
-    With ``max_hamming >= 64 // band_bits`` that is a subset of all pairs
-    within ``max_hamming`` (``phash_near_dup_pairs`` runs it so). Bands
-    never straddle the two halves, so ``band_bits`` must divide 32."""
-    if band_bits <= 0 or 32 % band_bits:
-        raise ValueError(f"band_bits={band_bits} must divide 32: the bands "
-                         "are cut inside the two 32-bit halves")
     per_half = 32 // band_bits
     mask = F.lit((1 << band_bits) - 1)
     band_structs = [
@@ -344,6 +338,26 @@ def _band_pairs_2x32(sigs: DataFrame, id_col: str, lo_col: str, hi_col: str,
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
+
+
+def phash_near_dup_pairs(df: DataFrame, max_hamming: int = 6) -> DataFrame:
+    """Image near-dup pairs by perceptual-hash Hamming distance: the 64-bit
+    ``phash`` split into its two 32-bit halves and fed to
+    ``hamming_band_pairs_2x32``. The band width is the widest that divides
+    32 and still gives more than ``max_hamming`` bands (8 bits at the
+    default 6), so every pair within ``max_hamming`` is returned;
+    ``max_hamming >= 64`` raises ``ValueError``.
+    Output: (id_a, id_b, hamming int)."""
+    band_bits = next((w for w in (32, 16, 8, 4, 2) if 64 // w > max_hamming), 1)
+    mask32 = F.lit(0xFFFFFFFF).cast("long")
+    halves = df.select(
+        "image_id",
+        F.col("phash").bitwiseAND(mask32).alias("lo"),
+        F.shiftright("phash", 32).bitwiseAND(mask32).alias("hi"),
+    )
+    return hamming_band_pairs_2x32(
+        halves, "image_id", "lo", "hi", max_hamming, band_bits
+    ).withColumn("hamming", F.col("hamming").cast("int"))
 
 
 def simhash_md5_near_dup_pairs(df: DataFrame, text_col: str = "text",

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pegasus_spark import codec
-from pegasus_spark.functions import multimodal, simops, textops
+from pegasus_spark.functions import simops, textops
 
 
 @pytest.fixture(scope="module")
@@ -267,20 +267,6 @@ def images(spark):
         rows, "image_id string, bytes binary, w int, h int, fmt string, phash long")
 
 
-def test_image_features_real_decode(spark, images):
-    feats = {r["image_id"]: r for r in multimodal.image_features(images).collect()}
-    assert all(f["decode_ok"] for f in feats.values())
-    for k, f in feats.items():
-        assert 0 <= f["brightness"] <= 255
-
-
-def test_image_resize(spark, images):
-    out = multimodal.image_resize(images, 8, 8).collect()
-    for r in out:
-        px = codec.png_decode(r["bytes"])
-        assert px.shape == (8, 8, 3)
-
-
 def _signed(x):
     return x - (1 << 64) if x >= 1 << 63 else x
 
@@ -304,11 +290,10 @@ def phashes(spark):
     return spark.createDataFrame(rows, "image_id string, phash long"), rows
 
 
-@pytest.mark.parametrize("band_bits,max_hamming", [(16, 3), (8, 7), (4, 15)])
-def test_phash_near_dup_matches_all_pairs(spark, phashes, band_bits, max_hamming):
+@pytest.mark.parametrize("max_hamming", [3, 6, 7, 15])
+def test_phash_near_dup_matches_all_pairs(spark, phashes, max_hamming):
     df, rows = phashes
-    out = multimodal.phash_near_dup_pairs(df, max_hamming=max_hamming,
-                                          band_bits=band_bits)
+    out = simops.phash_near_dup_pairs(df, max_hamming=max_hamming)
     assert out.schema.simpleString() == \
         "struct<id_a:string,id_b:string,hamming:int>"
     dist = {(a, b): bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
@@ -318,82 +303,19 @@ def test_phash_near_dup_matches_all_pairs(spark, phashes, band_bits, max_hamming
     assert {tuple(r) for r in out.collect()} == expected
 
 
+def test_phash_near_dup_defaults_find_one_flip_per_16_bit_band(spark):
+    # bits 0, 16, 32, 48: one in each 16-bit band, so only bands of 8 bits
+    # or fewer leave a shared band at distance 4
+    a = 0x0123456789ABCDEF
+    b = a ^ (1 << 0) ^ (1 << 16) ^ (1 << 32) ^ (1 << 48)
+    df = spark.createDataFrame([("a", a), ("b", b)], "image_id string, phash long")
+    assert [tuple(r) for r in simops.phash_near_dup_pairs(df).collect()] == \
+        [("a", "b", 4)]
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simops.phash_near_dup_pairs(df, max_hamming=64)
+
+
 def test_phash_near_dup(spark, images):
     pairs = {(r["id_a"], r["id_b"]) for r in
-             multimodal.phash_near_dup_pairs(images, max_hamming=0).collect()}
+             simops.phash_near_dup_pairs(images, max_hamming=0).collect()}
     assert ("img-0", "img-1") in pairs  # same pixels (qnt loses ≤2/255 → same phash)
-
-
-def _wav_bytes(samples: np.ndarray, sr: int, nch: int = 1) -> bytes:
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(nch)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        w.writeframes((samples * 32767).astype("<i2").tobytes())
-    return buf.getvalue()
-
-
-def test_audio_features_wav(spark):
-    sr = 8000
-    t = np.arange(sr)  # 1 s
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t / sr)  # 440 Hz tone
-    silence = np.zeros(sr // 2)  # 0.5 s of silence
-    stereo = np.repeat(sine[: sr // 4, None], 2, axis=1).ravel()  # 0.25 s stereo
-    df = spark.createDataFrame(
-        [
-            ("tone", _wav_bytes(sine, sr), "wav"),
-            ("quiet", _wav_bytes(silence, sr), "wav"),
-            ("stereo", _wav_bytes(stereo.reshape(-1, 2).ravel(), sr, nch=2), "wav"),
-            ("mp3", b"\xffITS-NOT-WAV", "mp3"),
-        ],
-        "clip_id string, bytes binary, fmt string",
-    )
-    feats = {r["clip_id"]: r for r in multimodal.audio_features(df).collect()}
-    tone = feats["tone"]
-    assert tone["decode_ok"] and tone["sample_rate"] == sr and tone["n_channels"] == 1
-    assert abs(tone["duration_s"] - 1.0) < 1e-6
-    assert abs(tone["rms"] - 0.5 / np.sqrt(2)) < 1e-3  # sine RMS = A/√2
-    assert abs(tone["spectral_centroid_hz"] - 440.0) < 5.0  # energy at the tone
-    assert feats["quiet"]["decode_ok"] and feats["quiet"]["rms"] == 0.0
-    assert feats["stereo"]["n_channels"] == 2
-    assert abs(feats["stereo"]["duration_s"] - 0.25) < 1e-6
-    assert not feats["mp3"]["decode_ok"]  # no codec in env → flagged, not raised
-
-
-def test_video_frame_sample_y4m(spark):
-    rng = np.random.default_rng(7)
-    frames = [rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8) for _ in range(7)]
-    df = spark.createDataFrame(
-        [
-            ("v1", multimodal.y4m_encode(frames, fps=30), "y4m"),
-            ("v2", b"\x00not-a-video", "mp4"),
-        ],
-        "video_id string, bytes binary, fmt string",
-    )
-    out = multimodal.video_frame_sample(df, every_n=3).collect()
-    got = {(r["video_id"], r["frame_no"]): r["frame_png"] for r in out}
-    assert {k for k in got if k[0] == "v1"} == {("v1", 0), ("v1", 3), ("v1", 6)}
-    # C444 YUV roundtrip is lossy only by rounding: every pixel within ±2
-    px0 = codec.png_decode(got[("v1", 3)])
-    assert px0.shape == (16, 16, 3)
-    assert np.abs(px0.astype(int) - frames[3].astype(int)).max() <= 2
-    assert got[("v2", -1)] is None  # undecodable container → marker row
-
-
-def test_y4m_420_colorspace():
-    # 4:2:0 chroma subsampling path, pure-python (no Spark needed)
-    w, h = 8, 8
-    y = np.full((h, w), 120, dtype=np.uint8)
-    u = np.full((h // 2, w // 2), 128, dtype=np.uint8)
-    v = np.full((h // 2, w // 2), 128, dtype=np.uint8)
-    data = (b"YUV4MPEG2 W8 H8 F30:1 C420\n" + b"FRAME\n"
-            + y.tobytes() + u.tobytes() + v.tobytes())
-    out = list(multimodal.y4m_decode_frames(data))
-    assert len(out) == 1
-    fno, arr = out[0]
-    assert fno == 0 and arr.shape == (8, 8, 3)
-    assert np.all(arr == 120)  # neutral chroma → gray at Y level
